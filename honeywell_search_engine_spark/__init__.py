@@ -14,9 +14,9 @@ Spark-first:
   compression, per-block max-score metadata) built with salted
   repartition-and-sort to defeat head-term skew, with per-partition lineage
   manifests for checkpointed resume;
-- BM25 top-k query engine: naive Catalyst-only path (broadcast term join +
-  hash aggregate) and a segment path with block-max WAND pruning inside
-  mapInPandas.
+- BM25 top-k query engine over the segments: one per-shard kernel per query
+  mode with block-max pruning, run by Spark inside applyInPandas and by the
+  Spark-free serving node (query/local.py).
 
 No per-row Python UDFs anywhere — only pandas_udf / applyInPandas /
 mapInPandas over Arrow batches, plus built-in pyspark.sql.functions.

@@ -400,8 +400,8 @@ def merge_deltas(
     a delta streamed with a different modulus can't corrupt the layout.
     `_fail_at` is a test-only fault-injection point ("staged",
     "invalidated", "mid_swap", "swapped")."""
-    from honeywell_search_engine_spark.index.naive import bucket_col
     from honeywell_search_engine_spark.index.segments import (
+        bucket_col,
         encode_pending_buckets,
         input_fingerprint,
     )

@@ -7,11 +7,15 @@ and `term_stats(term, df, ctf, idf)`; the scalars and the (small) term
 dictionary are broadcast to the scoring stage.
 
 idf is Lucene-style BM25 idf: ln(1 + (N - df + 0.5)/(df + 0.5)) — always
-positive, computed in float64.
+positive, computed in float64. Every query path scores with ``bm25_idf``
+(Python's ``math.log1p``); the JVM's ``log1p`` behind the ``idf`` column of
+``term_stats`` can differ from it by one ulp, so that column is not read
+for scoring.
 """
 
 from __future__ import annotations
 
+import math
 from dataclasses import dataclass
 
 from pyspark.sql import DataFrame, functions as F
@@ -23,6 +27,13 @@ from honeywell_search_engine_spark import B, K1
 class CorpusStats:
     n_docs: int
     avgdl: float
+
+
+def bm25_idf(n_docs: int, df: int) -> float:
+    """BM25 idf of a term with document frequency `df` in a corpus of
+    `n_docs` documents — the one definition the oracle, the Spark shard
+    kernels and the serving node share (bit-identical scores)."""
+    return math.log1p((n_docs - df + 0.5) / (df + 0.5))
 
 
 def corpus_stats(tok_docs: DataFrame) -> CorpusStats:

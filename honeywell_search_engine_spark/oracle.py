@@ -24,12 +24,12 @@ term (reference F4, fusion.py:42 websearch_to_tsquery).
 
 from __future__ import annotations
 
-import math
 from collections import Counter
 from dataclasses import dataclass, field
 
 from honeywell_search_engine_spark import B, K1
 from honeywell_search_engine_spark.functions.analyzer import analyze, analyze_query
+from honeywell_search_engine_spark.index.stats import bm25_idf
 
 
 @dataclass
@@ -79,9 +79,7 @@ class OracleIndex:
         return (analyze_query_stemmed if self.stemmed else analyze_query)(query)
 
     def idf(self, term: str) -> float:
-        df = len(self.postings.get(term, {}))
-        # log1p, not log(1+x): matches Spark's F.log1p bit-for-bit
-        return math.log1p((self.n_docs - df + 0.5) / (df + 0.5))
+        return bm25_idf(self.n_docs, len(self.postings.get(term, {})))
 
     def search(
         self, query: str, k: int = 10, allowed=None, exclude=None
@@ -117,8 +115,8 @@ class OracleIndex:
             for t, p in plists:
                 tf = float(p[docid])
                 # idf * u with u = tf*(k1+1)/(tf+norm): the association
-                # order shared by ALL engine paths (naive column expr,
-                # segment codec) so scores are bit-identical, not just close
+                # order shared by ALL engine paths (stats.bm25_part_col,
+                # codec.bm25_u) so scores are bit-identical, not just close
                 s += self.idf(t) * (tf * (K1 + 1.0) / (tf + norm))
             scored.append((docid, s))
         scored.sort(key=lambda x: (-x[1], x[0]))

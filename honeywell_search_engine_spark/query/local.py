@@ -36,23 +36,23 @@ swaps require reopening to observe).
 from __future__ import annotations
 
 import json
-import math
 from collections import OrderedDict
 
 import numpy as np
 
-from honeywell_search_engine_spark.index.naive import bucket_of
-from honeywell_search_engine_spark.index.segments import load_tombstones
+from honeywell_search_engine_spark.index.segments import bucket_of, load_tombstones
+from honeywell_search_engine_spark.index.stats import bm25_idf
 from honeywell_search_engine_spark.query import wand as W
 
 
-# Per-shard posting-list size above which the decode-through path switches
-# from fully-vectorized full-scan kernels to the block-walk kernels with
-# exact block-max pruning (still decode-free via MemoList slices). The
-# crossover: a full scan costs ~10 ns/posting, so a 128k list is ~1.3 ms —
-# about the fixed bookkeeping cost of the pruning kernels; below it the
-# scan wins (measured ~3x at 20k docs), above it pruning's skipped work
-# dominates (a Zipf head term at web scale is 10^6-10^8 postings/shard).
+# Per-shard posting-list size above which the single-term, AND and OR
+# kernels run with exact block-max pruning (`prune=True`); at or below
+# it they score the cached decode in one vectorized pass. The crossover:
+# a full scan costs ~10 ns/posting, so a 128k list is ~1.3 ms — about the
+# fixed bookkeeping cost of pruning; below it the scan wins (measured ~3x
+# at 20k docs), above it pruning's skipped work dominates (a Zipf head
+# term at web scale is 10^6-10^8 postings/shard). Pruning is exact, so
+# the choice never changes results.
 FULLSCAN_MAX_POSTINGS = 1 << 17
 
 
@@ -83,19 +83,12 @@ class ServingIndex:
         self,
         path: str,
         term_cache_capacity: int = 65536,
-        decode_through: bool = True,
         dec_cache_bytes: int = 256 << 20,
         shards: list[int] | None = None,
     ):
         import pyarrow.parquet as pq
 
         self.path = path
-        # decode-through: AND/OR/single queries run on fully-decoded
-        # posting lists from the (term, shard) LRU — warm queries skip
-        # codec work entirely (phrase/NEAR already did this). False keeps
-        # the block-selective encoded kernels (used by parity tests; also
-        # the right setting for a one-shot cold query over a huge term).
-        self.decode_through = decode_through
         # shard-subset mode (the 10^12-doc deployment unit): this node
         # owns only `shards` — docmap rows and posting payloads load for
         # those shards alone, so per-node memory scales with owned
@@ -176,7 +169,6 @@ class ServingIndex:
         self.__init__(
             self.path,
             term_cache_capacity=self._term_cap,
-            decode_through=self.decode_through,
             dec_cache_bytes=self._dec_budget,
             shards=self._shards,
         )
@@ -262,7 +254,7 @@ class ServingIndex:
             df = self._df_cache.get(term, 0)
         else:
             df = sum(int(r["n"]) for r in rows)
-        return math.log1p((self.n_docs - df + 0.5) / (df + 0.5))
+        return bm25_idf(self.n_docs, df)
 
     # ---- queries ----------------------------------------------------------
 
@@ -310,72 +302,30 @@ class ServingIndex:
                 neg_by_shard.setdefault(int(row["shard"]), []).append((t, row))
         out: list[tuple[int, float]] = []
         for s, trs in by_shard.items():
+            if mode == "and" and len(trs) < len(terms):
+                continue  # a term absent in this shard => no AND hit here
             dead = self._dead.get(s, W._NO_DEAD)
             sc = scope.get(s, W._NO_DEAD) if scope is not None else None
-            if self.decode_through:
-                all_rows = trs + neg_by_shard.get(s, [])
-                if max(int(r["n"]) for _, r in all_rows) <= FULLSCAN_MAX_POSTINGS:
-                    # small lists: fully-vectorized scan kernels over the
-                    # cached decoded arrays — lowest constant cost, and
-                    # pruning cannot pay for its bookkeeping at this size
-                    # (measured ~3x faster than the block-walk kernels)
-                    pls = [(t, self._decoded(t, s, r)) for t, r in trs]
-                    neg_pls = [
-                        (t, self._decoded(t, s, r))
-                        for t, r in neg_by_shard.get(s, [])
-                    ]
-                    if mode == "and":
-                        if len(pls) < len(terms):
-                            continue
-                        if len(terms) == 1:
-                            res = W._topk_single_decoded(
-                                pls[0][1], idf[pls[0][0]], self.avgdl, k,
-                                dead, sc, neg_pls,
-                            )
-                        else:
-                            res = W._shard_kernel_and_decoded(
-                                pls, idf, self.avgdl, k, dead, scope=sc,
-                                neg_pls=neg_pls,
-                            )
-                    else:
-                        res = W._shard_kernel_or_decoded(
-                            pls, idf, self.avgdl, k, dead, scope=sc
-                        )
-                    arr = self._docid_of[s]
-                    out.extend(
-                        (int(arr[int(l)]), float(v)) for l, v in res
-                    )
-                    continue
-                # big lists (Zipf head terms): MemoList — the SAME
-                # encoded kernels, with their exact block-max pruning
-                # (essential at scale: a full scan of a 10M-posting list
-                # per query doesn't survive 100x), but block "decode" is
-                # a slice of the cached full decode
-                rows = [(t, self._memo(t, s, r)) for t, r in trs]
-                neg_rows = [
-                    (t, self._memo(t, s, r))
-                    for t, r in neg_by_shard.get(s, [])
-                ]
+            rows = [(t, self._memo(t, s, r)) for t, r in trs]
+            neg_rows = [(t, self._memo(t, s, r)) for t, r in neg_by_shard.get(s, [])]
+            # block-max pruning pays for its bookkeeping only on long
+            # lists (Zipf head terms); short ones are scored in one
+            # vectorized pass over the cached decode
+            prune = max(x.n for _, x in rows + neg_rows) > FULLSCAN_MAX_POSTINGS
+            if mode == "and" and len(terms) == 1:
+                res = W._topk_single(
+                    rows[0][1], idf[rows[0][0]], self.avgdl, k, dead, sc,
+                    neg_rows, prune=prune,
+                )
+            elif mode == "and":
+                res = W._shard_kernel_and(
+                    rows, idf, self.avgdl, k, dead, prune=prune, scope=sc,
+                    neg_rows=neg_rows,
+                )
             else:
-                rows = [(t, W._enc_from_row(r)) for t, r in trs]
-                neg_rows = [
-                    (t, W._enc_from_row(r)) for t, r in neg_by_shard.get(s, [])
-                ]
-            if mode == "and":
-                if len(rows) < len(terms):
-                    continue
-                if len(terms) == 1:
-                    res = W._topk_single(
-                        rows[0][1], idf[rows[0][0]], self.avgdl, k, dead, sc,
-                        neg_rows,
-                    )
-                else:
-                    res = W._shard_kernel_and(
-                        rows, idf, self.avgdl, k, dead, scope=sc,
-                        neg_rows=neg_rows,
-                    )
-            else:
-                res = W._shard_kernel_or(rows, idf, self.avgdl, k, dead, scope=sc)
+                res = W._shard_kernel_or(
+                    rows, idf, self.avgdl, k, dead, prune=prune, scope=sc
+                )
             arr = self._docid_of[s]
             out.extend((int(arr[int(l)]), float(v)) for l, v in res)
         out.sort(key=lambda r: (-r[1], r[0]))
@@ -424,15 +374,10 @@ class ServingIndex:
         out: list[tuple[int, float]] = []
         for s, tmap in by_shard.items():
             dead = self._dead.get(s, W._NO_DEAD)
-            if self.decode_through:
-                # MemoList-backed: the websearch kernels run unchanged
-                # (selective probes become slices of the cached decode)
-                by_term = {
-                    t: self._memo(t, s, r, positions=t in need_pos)
-                    for t, r in tmap.items()
-                }
-            else:
-                by_term = {t: W._enc_from_row(r) for t, r in tmap.items()}
+            by_term = {
+                t: self._memo(t, s, r, positions=t in need_pos)
+                for t, r in tmap.items()
+            }
             if single:
                 all_pos, neg, phrases, _ = groups[0]
                 if any(t not in by_term for t in all_pos):
@@ -456,43 +401,12 @@ class ServingIndex:
     ) -> list[tuple[int, float]]:
         """Exact phrase / ordered-NEAR — mirrors wand.bm25_topk_phrase.
 
-        Positional decode rides a (term, shard)-keyed LRU of fully-decoded
-        posting lists, so a warm phrase query costs only intersection +
-        positional verify — no varbyte work (measured ~3x faster at 60k
-        docs; same results, pinned vs the Spark path and oracle)."""
+        Positions ride the decoded-postings LRU (_memo), so a warm phrase
+        query costs only intersection + positional verify — no varbyte
+        work (measured ~3x faster at 60k docs; same results, pinned vs
+        the Spark path and oracle)."""
         _aq, _tok, _sg = W._analyzers_for(self)
-        terms = _tok(phrase)
-        if not terms:
-            return []
-        rows_by_term = self._rows_for(terms)
-        if any(not rows_by_term[t] for t in set(terms)):
-            return []
-        idf = {t: self._idf(r, t) for t, r in rows_by_term.items()}
-        by_shard: dict[int, dict[str, dict]] = {}
-        for t, rows in rows_by_term.items():
-            for row in rows:
-                by_shard.setdefault(int(row["shard"]), {})[t] = row
-        out: list[tuple[int, float]] = []
-        for s, tmap in by_shard.items():
-            if any(t not in tmap for t in terms):
-                continue
-            dead = self._dead.get(s, W._NO_DEAD)
-            if max(int(tmap[t]["n"]) for t in terms) > FULLSCAN_MAX_POSTINGS:
-                # head-term phrase: keep candidate-block selectivity
-                # (positions sliced only for candidate blocks), decode-free
-                rows = [(t, self._memo(t, s, tmap[t], positions=True)) for t in terms]
-                res = W._shard_kernel_phrase(
-                    rows, idf, self.avgdl, k, dead, slop
-                )
-            else:
-                pls = [(t, self._decoded(t, s, tmap[t], positions=True)) for t in terms]
-                res = W._shard_kernel_phrase_decoded(
-                    pls, idf, self.avgdl, k, dead, slop
-                )
-            arr = self._docid_of[s]
-            out.extend((int(arr[int(l)]), float(v)) for l, v in res)
-        out.sort(key=lambda r: (-r[1], r[0]))
-        return out[:k]
+        return self._search_positional(_tok(phrase), k, slop)
 
     def search_near_unordered(
         self, query: str, k: int = 10, dist: int = 3
@@ -507,6 +421,13 @@ class ServingIndex:
                 "search_near_unordered is the two-distinct-term NEAR "
                 f"operator; got {terms!r}"
             )
+        return self._search_positional(terms, k, dist, unordered=True)
+
+    def _search_positional(
+        self, terms: list[str], k: int, slop: int, unordered: bool = False
+    ) -> list[tuple[int, float]]:
+        if not terms:
+            return []
         rows_by_term = self._rows_for(terms)
         if any(not rows_by_term[t] for t in terms):
             return []
@@ -519,17 +440,11 @@ class ServingIndex:
         for s, tmap in by_shard.items():
             if any(t not in tmap for t in terms):
                 continue
-            dead = self._dead.get(s, W._NO_DEAD)
-            if max(int(tmap[t]["n"]) for t in terms) > FULLSCAN_MAX_POSTINGS:
-                rows = [(t, self._memo(t, s, tmap[t], positions=True)) for t in terms]
-                res = W._shard_kernel_phrase(
-                    rows, idf, self.avgdl, k, dead, slop=dist, unordered=True
-                )
-            else:
-                pls = [(t, self._decoded(t, s, tmap[t], positions=True)) for t in terms]
-                res = W._shard_kernel_phrase_decoded(
-                    pls, idf, self.avgdl, k, dead, slop=dist, unordered=True
-                )
+            rows = [(t, self._memo(t, s, tmap[t], positions=True)) for t in terms]
+            res = W._shard_kernel_phrase(
+                rows, idf, self.avgdl, k, self._dead.get(s, W._NO_DEAD),
+                slop, unordered,
+            )
             arr = self._docid_of[s]
             out.extend((int(arr[int(l)]), float(v)) for l, v in res)
         out.sort(key=lambda r: (-r[1], r[0]))
@@ -540,8 +455,9 @@ class ServingIndex:
         """MemoList (encoded row + its full decode, codec.MemoList) for
         one (term, shard), LRU-memoized — the hot-term working set of a
         serving node, same idea as the encoded-row LRU one level up.
-        Kernels run on it unchanged (block decode = slice) so warm
-        queries keep block-max pruning but skip codec work. Positions
+        Every serving lookup goes through here: the kernels run on it
+        unchanged (block decode = slice, probe = one searchsorted), so
+        warm queries keep block-max pruning but skip codec work. Positions
         (flat absolute) decode only when a positional query first asks
         (`positions=True`); an entry cached without them is upgraded in
         place, so AND/OR traffic never pays for position decode and a
@@ -577,12 +493,6 @@ class ServingIndex:
         else:
             self._dec_lru.move_to_end(key)
         return ml
-
-    def _decoded(self, term: str, shard: int, row: dict,
-                 positions: bool = False):
-        """The cached PostingList for one (term, shard) — the phrase/NEAR
-        kernels consume the decoded arrays directly."""
-        return self._memo(term, shard, row, positions).pl
 
     # ---- suggest / spell (serving-side mirrors of query/suggest.py) ------
 

@@ -2,8 +2,8 @@
 
 Distributed plan:
 
-    term_stats lookup (≤12 rows, partition-pruned)      [driver]
-    segments scan: bucket-dir pruning + term pushdown    [executors]
+    segments scan: bucket-dir pruning + term pushdown,   [executors]
+      df attached by a broadcast join of term_stats
     -> groupBy(shard).applyInPandas(shard kernel)        [executors,
        one tiny group per shard: ≤ n_terms encoded rows] parallel]
     -> global TakeOrderedAndProject(k, (-score, docid))  [k rows/shard]
@@ -11,23 +11,30 @@ Distributed plan:
 Because ``shard = pmod(docid, n_shards)`` every document's postings live in
 exactly one shard, so conjunctive evaluation is shard-local and the global
 top-k is the k-merge of per-shard top-k's — exact, no recall loss (tested
-rank-identical to both the naive Catalyst engine and the oracle).
+rank- and score-identical to the oracle, oracle.py).
 
-Shard kernel (numpy, per shard):
+Shard kernels (numpy), one per query mode — single term, AND, OR, phrase /
+NEAR, websearch — each shared by this Spark path and the serving node
+(query/local.py). A kernel takes its lists as codec.EncodedList (encoded
+segment rows) or codec.MemoList (a cached full decode); the one place the
+two differ is _probe, which looks candidate docids up in a list.
 
-- AND (default, reference F4 websearch_to_tsquery semantics): iterate
-  terms by ascending df; decode the rarest list fully; every other list is
-  decoded *selectively* — searchsorted over its block-max docids finds the
-  only blocks that can contain surviving candidates, everything else is
-  skipped (block-max docid skipping). Exact scores for survivors, float64,
-  lexicographic term order (bit-identical to the oracle).
+- AND (default, reference F4 websearch_to_tsquery semantics): the rarest
+  list drives; every other list is probed at the surviving candidates
+  only — on an encoded list only the blocks that can hold a candidate
+  are decoded (block-max docid skipping). Exact scores for survivors,
+  float64, lexicographic term order (bit-identical to the oracle).
 - Single term: blocks are visited in descending idf*bmax_u (block-max
   score order); once the k-th heap score exceeds the next block's upper
   bound the remaining blocks are provably irrelevant and never decoded —
   classic block-max top-k, exact.
 - OR (disjunctive, reference F5 triple-match semantics): exact vectorized
-  union scoring — see _shard_kernel_or for why the OR path trades pruning
-  for guaranteed-exact returned scores.
+  union scoring with interval-sweep block pruning — see _shard_kernel_or.
+
+The single-term, AND and OR kernels take `prune`: the Spark path always
+prunes; the serving node prunes only lists long enough for the pruning
+bookkeeping to pay (query/local.FULLSCAN_MAX_POSTINGS). Pruning is exact,
+so results do not depend on it.
 
 Deleted documents (tombstones, index/maintenance.py) are filtered inside
 the kernels from the broadcast tombstone set until compaction folds them
@@ -43,6 +50,7 @@ from pyspark.sql import DataFrame, functions as F
 from honeywell_search_engine_spark.functions.analyzer import analyze_query
 from honeywell_search_engine_spark.index import codec
 from honeywell_search_engine_spark.index.segments import SegmentIndex
+from honeywell_search_engine_spark.index.stats import bm25_idf
 
 RESULT_SCHEMA = "docid long, score double"
 
@@ -114,17 +122,167 @@ def _select_topk_with_ties(lids: np.ndarray, scores: np.ndarray, k: int):
     return list(zip(lids[idx], scores[idx]))
 
 
-def _topk_single(enc: codec.EncodedList, idf: float, avgdl: float, k: int,
+# Every kernel takes its lists as (term, x) pairs where x is either a
+# codec.EncodedList (the Spark path: encoded segment rows) or a
+# codec.MemoList (the serving node's decoded LRU and the Spark batch
+# path's shared terms: the encoded row plus one cached full decode). Both
+# expose n / bmax_docid / bmax_u and go through codec.decode_postings /
+# decode_blocks, so the only place the representation matters is _probe.
+
+
+def _gather_flat(positions: np.ndarray, starts: np.ndarray, sel: np.ndarray) -> np.ndarray:
+    """Flat positions of postings `sel`, where posting i's positions are
+    positions[starts[i]:starts[i+1]] — a vectorized segment gather."""
+    seg_s = starts[sel]
+    seg_l = starts[sel + 1] - seg_s
+    out_starts = np.zeros(sel.size, dtype=np.int64)
+    if sel.size > 1:
+        np.cumsum(seg_l[:-1], out=out_starts[1:])
+    gidx = (
+        np.arange(int(seg_l.sum()), dtype=np.int64)
+        - np.repeat(out_starts, seg_l)
+        + np.repeat(seg_s, seg_l)
+    )
+    return positions[gidx]
+
+
+def _probe(x, cand: np.ndarray, with_positions: bool = False):
+    """Look the sorted candidate docids `cand` up in list `x`. Returns
+    (keep mask over cand, tfs, doclens, flat positions | None), the
+    columns aligned with cand[keep].
+
+    This is the one place a kernel probes a list, and the one choice made
+    from the representation: an EncodedList decodes only the blocks that
+    could hold a candidate (block-max docid skip: the first block whose
+    last docid >= the candidate); a MemoList is one searchsorted over its
+    cached full decode."""
+    cand = cand.astype(np.uint64, copy=False)
+    if isinstance(x, codec.MemoList):
+        pl = codec.decode_postings(
+            x, with_positions=with_positions, flat_positions=True
+        )
+    else:
+        blocks = np.searchsorted(x.bmax_docid, cand.astype(np.int64), side="left")
+        pl = codec.decode_blocks(
+            x, np.unique(blocks[blocks < x.bmax_docid.size]),
+            with_positions=with_positions, flat_positions=True,
+        )
+    pos = np.searchsorted(pl.docids, cand)
+    ok = pos < pl.docids.size
+    keep = np.zeros(cand.size, dtype=bool)
+    keep[ok] = pl.docids[pos[ok]] == cand[ok]
+    sel = pos[keep]
+    flat = None
+    if with_positions:
+        if isinstance(x, codec.MemoList):
+            starts = x._pos_offsets()
+        else:
+            starts = np.zeros(pl.tfs.size + 1, dtype=np.int64)
+            np.cumsum(pl.tfs.astype(np.int64), out=starts[1:])
+        flat = _gather_flat(pl.positions, starts, sel)
+    return keep, pl.tfs[sel], pl.doclens[sel], flat
+
+
+def _negated_mask(neg_rows: list, cand: np.ndarray) -> np.ndarray:
+    """True where cand appears in ANY negated term's list — websearch
+    '-term' exclusion, probed at the candidates only (a negated term's
+    list is never fully decoded)."""
+    hit = np.zeros(cand.size, dtype=bool)
+    for _t, x in neg_rows:
+        if cand.size == 0:
+            break
+        hit |= _probe(x, cand)[0]
+    return hit
+
+
+def _alive(lids: np.ndarray, dead: np.ndarray, scope: np.ndarray | None,
+           neg_rows: list = ()) -> np.ndarray:
+    """Mask over `lids`: not tombstoned (`dead`: this shard's sorted
+    tombstoned lids, from a Spark broadcast — never a per-task Python
+    set), inside `scope` when given (the sorted allowed lids — the
+    reference's per-caller allowed_ids restriction, F2/F3), and in no
+    negated term's list."""
+    keep = np.ones(lids.size, dtype=bool)
+    if dead.size or scope is not None:
+        li = lids.astype(np.int64, copy=False)
+        if dead.size:
+            keep &= ~np.isin(li, dead)
+        if scope is not None:
+            keep &= np.isin(li, scope)
+    if neg_rows and keep.any():
+        keep[keep] = ~_negated_mask(neg_rows, lids[keep])
+    return keep
+
+
+def _take(cand: np.ndarray, cols: dict, keep: np.ndarray):
+    """cand[keep], with every column of `cols` ({term: (tfs, doclens,
+    flat positions | None)} aligned with cand) filtered alike."""
+    if keep.all():
+        return cand, cols
+    out = {}
+    for t, (tfs, dls, flat) in cols.items():
+        if flat is not None:
+            flat = flat[np.repeat(keep, tfs.astype(np.int64))]
+        out[t] = (tfs[keep], dls[keep], flat)
+    return cand[keep], out
+
+
+def _drive(row, dead: np.ndarray, scope: np.ndarray | None = None,
+           neg_rows: list = (), with_positions: bool = False):
+    """Candidates of a conjunction: the driving (term, list) decoded in
+    full and filtered by tombstones, scope and negation. Returns
+    (cand, cols) for _intersect."""
+    t, x = row
+    pl = codec.decode_postings(x, with_positions=with_positions, flat_positions=True)
+    cols = {t: (pl.tfs, pl.doclens, pl.positions if with_positions else None)}
+    return _take(pl.docids, cols, _alive(pl.docids, dead, scope, neg_rows))
+
+
+def _intersect(rows: list, cand: np.ndarray, cols: dict, need_pos=()):
+    """Keep the candidates present in every (term, list) of `rows`, each
+    probed at the surviving candidates only; `cols` is filtered along and
+    gains each probed term's columns (positions for terms in need_pos)."""
+    for t, x in rows:
+        if cand.size == 0:
+            break
+        wp = t in need_pos
+        keep, tfs, dls, flat = _probe(x, cand, with_positions=wp)
+        cand, cols = _take(cand, cols, keep)
+        cols = {**cols, t: (tfs, dls, flat)}
+    return cand, cols
+
+
+def _score(cols: dict, idf: dict[str, float], avgdl: float) -> np.ndarray:
+    """Exact BM25 per candidate: the per-term contributions summed in
+    lexicographic term order (float64 bit-parity with the oracle)."""
+    score = np.zeros(next(iter(cols.values()))[0].size, dtype=np.float64)
+    for t in sorted(cols):
+        tfs, dls, _flat = cols[t]
+        score += idf[t] * _u_exact(tfs, dls, avgdl)
+    return score
+
+
+def _topk(cand: np.ndarray, cols: dict, idf: dict[str, float], avgdl: float, k: int):
+    if cand.size == 0:
+        return []
+    return _select_topk_with_ties(cand.astype(np.int64), _score(cols, idf, avgdl), k)
+
+
+def _topk_single(x, idf: float, avgdl: float, k: int,
                  dead: np.ndarray = _NO_DEAD, scope: np.ndarray | None = None,
-                 neg_rows: list = ()):
-    """Exact single-term top-k with block-max score pruning. `dead` is a
-    sorted int64 tombstoned-lid array for THIS shard (from a Spark
-    broadcast — never a per-task Python set); `scope`, when given, is the
-    sorted allowed-lid array (the reference's per-caller allowed_ids
-    restriction, F2/F3); `neg_rows` are (term, EncodedList) exclusions
-    (websearch '-term'), filtered per chunk BEFORE the top-k buffer so the
-    pruning threshold never counts an excluded doc."""
-    order = np.argsort(-enc.bmax_u, kind="stable")
+                 neg_rows: list = (), prune: bool = True):
+    """Exact single-term top-k. `neg_rows` are (term, list) exclusions
+    (websearch '-term'), filtered per chunk BEFORE the top-k buffer so
+    the pruning threshold never counts an excluded doc.
+
+    With `prune`, blocks are visited in descending idf*bmax_u (block-max
+    score order); once the k-th buffered score exceeds the next block's
+    upper bound the remaining blocks are provably irrelevant and never
+    decoded — classic block-max top-k, exact. Without it the whole list
+    is scored in one vectorized pass (cheaper for short lists)."""
+    if not prune:
+        return _topk(*_drive(("", x), dead, scope, neg_rows), {"": idf}, avgdl, k)
+    order = np.argsort(-x.bmax_u, kind="stable")
     # Blocks are visited in descending-bound order in CHUNKS: the stop
     # test uses the first (= highest-bound) block of the next chunk, so
     # pruning stays exact — at worst chunk-1 extra blocks decode. The
@@ -137,22 +295,13 @@ def _topk_single(enc: codec.EncodedList, idf: float, avgdl: float, k: int,
     cand_s: list[np.ndarray] = []
     for i in range(0, order.size, chunk):
         batch = order[i : i + chunk]
-        bound = idf * enc.bmax_u[batch[0]]  # max bound among all remaining
+        bound = idf * x.bmax_u[batch[0]]  # max bound among all remaining
         if topbuf.size >= k and bound < topbuf.min():
             break  # every remaining block has a strictly smaller bound
-        pl = codec.decode_blocks(enc, np.sort(batch))
-        lids = pl.docids.astype(np.int64)
-        scores = idf * _u_exact(pl.tfs, pl.doclens, avgdl)
-        if dead.size:
-            alive = ~np.isin(lids, dead)
-            lids, scores = lids[alive], scores[alive]
-        if scope is not None:
-            m = np.isin(lids, scope)
-            lids, scores = lids[m], scores[m]
-        if neg_rows and lids.size:
-            keep_n = ~_negated_mask(neg_rows, lids)
-            lids, scores = lids[keep_n], scores[keep_n]
-        cand_d.append(lids)
+        pl = codec.decode_blocks(x, np.sort(batch))
+        keep = _alive(pl.docids, dead, scope, neg_rows)
+        scores = idf * _u_exact(pl.tfs[keep], pl.doclens[keep], avgdl)
+        cand_d.append(pl.docids[keep].astype(np.int64))
         cand_s.append(scores)
         if scores.size:
             merged = np.concatenate([topbuf, scores])
@@ -166,49 +315,16 @@ def _topk_single(enc: codec.EncodedList, idf: float, avgdl: float, k: int,
     )
 
 
-def _candidate_blocks(enc: codec.EncodedList, cand: np.ndarray) -> np.ndarray:
-    """Block index that could contain each candidate docid: first block
-    whose bmax_docid >= cand (bmax_docid is ascending)."""
-    return np.searchsorted(enc.bmax_docid, cand, side="left")
-
-
-def _negated_mask(neg_rows: list, cand: np.ndarray) -> np.ndarray:
-    """True where cand appears in ANY negated term's posting list —
-    websearch '-term' exclusion. Candidate-selective decode: only the
-    blocks that could contain a candidate are touched (same skip pattern
-    as the AND intersect); a negated term's list is never fully decoded."""
-    ci = cand.astype(np.int64)
-    hit = np.zeros(ci.size, dtype=bool)
-    for _t, enc in neg_rows:
-        if ci.size == 0:
-            break
-        if isinstance(enc, codec.PostingList):  # decoded-LRU path
-            hit |= _member_mask(enc.docids.astype(np.int64), ci)
-            continue
-        blocks = _candidate_blocks(enc, ci)
-        valid = blocks < enc.bmax_docid.size
-        if not valid.any():
-            continue
-        ublocks = np.unique(blocks[valid])
-        pl = codec.decode_blocks(enc, ublocks)
-        pd_ids = pl.docids.astype(np.int64)
-        cand_v = ci[valid]
-        pos = np.searchsorted(pd_ids, cand_v)
-        ok = pos < pd_ids.size
-        match = np.zeros(cand_v.size, dtype=bool)
-        match[ok] = pd_ids[pos[ok]] == cand_v[ok]
-        hit[np.flatnonzero(valid)[match]] = True
-    return hit
-
-
 def _shard_kernel_and(term_rows: list, idf: dict[str, float], avgdl: float,
                       k: int, dead: np.ndarray = _NO_DEAD, prune: bool = True,
                       scope: np.ndarray | None = None, neg_rows: list = ()):
-    """Conjunctive evaluation of one shard. term_rows: (term, EncodedList),
-    all query terms present (caller enforces).
+    """Conjunctive evaluation of one shard. term_rows: (term, list), all
+    query terms present (caller enforces).
 
-    Rarest list drives; every other list is decoded selectively: only the
-    blocks that can contain a surviving candidate (block-max docid skip).
+    The rarest list drives; every other list is probed at the surviving
+    candidates only (_probe). Tombstones, scope and websearch '-term'
+    exclusion filter the driver BEFORE pruning, so theta derives only
+    from docs that can actually be returned.
 
     Score-bound pruning (`prune`, exact): with more candidates than k, each
     candidate's upper bound U = (driver's EXACT contribution) + sum over
@@ -226,95 +342,30 @@ def _shard_kernel_and(term_rows: list, idf: dict[str, float], avgdl: float,
     only the always-valid "past the last block" drop applies. (An earlier
     version took theta from UNVERIFIED driver contributions, which
     over-prunes when high-driver-score docs fail the intersection.)"""
-    term_rows = sorted(term_rows, key=lambda tr: tr[1].n)
-    t0, e0 = term_rows[0]
-    pl0 = codec.decode_postings(e0)
-    cand = pl0.docids  # uint64 ascending
-    tf_cols = {t0: (pl0.tfs, pl0.doclens)}
-    if dead.size:
-        alive = ~np.isin(cand.astype(np.int64), dead)
-        cand = cand[alive]
-        tf_cols[t0] = (pl0.tfs[alive], pl0.doclens[alive])
-    if scope is not None:
-        m = np.isin(cand.astype(np.int64), scope)
-        tfs0, dls0 = tf_cols[t0]
-        cand = cand[m]
-        tf_cols[t0] = (tfs0[m], dls0[m])
-    if neg_rows and cand.size:
-        # websearch '-term' exclusion BEFORE pruning, so theta derives
-        # only from docs that can actually be returned
-        keep_n = ~_negated_mask(neg_rows, cand)
-        if not keep_n.all():
-            tfs0, dls0 = tf_cols[t0]
-            cand = cand[keep_n]
-            tf_cols[t0] = (tfs0[keep_n], dls0[keep_n])
+    rows = sorted(term_rows, key=lambda tr: tr[1].n)
+    cand, cols = _drive(rows[0], dead, scope, neg_rows)
     if prune and cand.size > k:
-        tfs0, dls0 = tf_cols[t0]
+        t0 = rows[0][0]
+        tfs0, dls0, _ = cols[t0]
         exact0 = idf[t0] * _u_exact(tfs0, dls0, avgdl)  # exact driver part
         ub = exact0.copy()
-        keep_any = np.ones(cand.size, dtype=bool)
+        keep = np.ones(cand.size, dtype=bool)
         ci = cand.astype(np.int64)
-        for t, enc in term_rows[1:]:
-            b = np.searchsorted(enc.bmax_docid, ci, side="left")
-            valid = b < enc.bmax_docid.size
-            keep_any &= valid  # beyond t's last block -> AND can never hold
-            ub[valid] += idf[t] * enc.bmax_u[b[valid]]
-        # probe: verify the k best-by-driver candidates against the full
-        # conjunction (selective decode over ≤k docids — a handful of
-        # blocks per list) and take theta from their TRUE scores
-        probe_idx = np.sort(np.argpartition(exact0, exact0.size - k)[exact0.size - k:])
-        v_cand, v_cols = _intersect_selective(
-            term_rows[1:], cand[probe_idx],
-            {t0: (tfs0[probe_idx], dls0[probe_idx])},
-        )
-        theta = None
+        for t, x in rows[1:]:
+            b = np.searchsorted(x.bmax_docid, ci, side="left")
+            valid = b < x.bmax_docid.size
+            keep &= valid  # beyond t's last block -> AND can never hold
+            ub[valid] += idf[t] * x.bmax_u[b[valid]]
+        # verify the k best-by-driver candidates against the full
+        # conjunction and take theta from their TRUE scores
+        best = np.zeros(cand.size, dtype=bool)
+        best[np.argpartition(exact0, exact0.size - k)[exact0.size - k:]] = True
+        v_cand, v_cols = _intersect(rows[1:], *_take(cand, cols, best))
         if v_cand.size >= k:
-            v_score = np.zeros(v_cand.size, dtype=np.float64)
-            for t in sorted(v_cols):
-                tfs, dls = v_cols[t]
-                v_score += idf[t] * _u_exact(tfs, dls, avgdl)
-            theta = np.partition(v_score, v_score.size - k)[v_score.size - k]
-        keep = keep_any if theta is None else keep_any & (ub >= theta)
-        if not keep.all():
-            cand = cand[keep]
-            tf_cols[t0] = (tfs0[keep], dls0[keep])
-    cand, tf_cols = _intersect_selective(term_rows[1:], cand, tf_cols)
-    if cand.size == 0:
-        return []
-    # exact scores, lexicographic term order (oracle bit-parity)
-    score = np.zeros(cand.size, dtype=np.float64)
-    for t in sorted(tf_cols):
-        tfs, dls = tf_cols[t]
-        score += idf[t] * _u_exact(tfs, dls, avgdl)
-    return _select_topk_with_ties(cand.astype(np.int64), score, k)
-
-
-def _intersect_selective(rest_rows: list, cand: np.ndarray, tf_cols: dict):
-    """Intersect `cand` (ascending docids, with driver tf columns already
-    in tf_cols) against every (term, EncodedList) in rest_rows, decoding
-    ONLY the blocks that can contain a surviving candidate. Returns the
-    matched (cand, tf_cols) with one (tfs, doclens) column per term."""
-    for t, enc in rest_rows:
-        if cand.size == 0:
-            return cand, tf_cols
-        nblocks = enc.bmax_docid.size
-        blocks = _candidate_blocks(enc, cand.astype(np.int64))
-        valid = blocks < nblocks  # candidates beyond the last block can't match
-        ublocks = np.unique(blocks[valid])
-        pl = codec.decode_blocks(enc, ublocks)  # only candidate blocks decoded
-        cand_v = cand[valid]
-        pos = np.searchsorted(pl.docids, cand_v)
-        ok = pos < pl.docids.size
-        match = np.zeros(cand_v.size, dtype=bool)
-        match[ok] = pl.docids[pos[ok]] == cand_v[ok]
-        keep = np.zeros(cand.size, dtype=bool)
-        keep[np.flatnonzero(valid)[match]] = True
-        sel = pos[match]
-        for tt in list(tf_cols):
-            tf_cols[tt] = (tf_cols[tt][0][keep], tf_cols[tt][1][keep])
-        tf_cols[t] = (pl.tfs[sel], pl.doclens[sel])
-        cand = cand[keep]
-    return cand, tf_cols
+            v_score = _score(v_cols, idf, avgdl)
+            keep &= ub >= np.partition(v_score, v_score.size - k)[v_score.size - k]
+        cand, cols = _take(cand, cols, keep)
+    return _topk(*_intersect(rows[1:], cand, cols), idf, avgdl, k)
 
 
 def _or_block_prune(term_rows: list, idf: dict[str, float], avgdl: float,
@@ -399,10 +450,7 @@ def _shard_kernel_or(term_rows: list, idf: dict[str, float], avgdl: float,
         mask = np.zeros(union.size, dtype=bool)
         mask[inb] = keep[iv[inb]]
         union = union[mask]
-    if dead.size:
-        union = union[~np.isin(union.astype(np.int64), dead)]
-    if scope is not None:
-        union = union[np.isin(union.astype(np.int64), scope)]
+    union = union[_alive(union, dead, scope)]
     score = np.zeros(union.size, dtype=np.float64)
     for t, pl in decoded:  # lexicographic order
         pos = np.searchsorted(union, pl.docids)
@@ -413,265 +461,28 @@ def _shard_kernel_or(term_rows: list, idf: dict[str, float], avgdl: float,
     return _select_topk_with_ties(union.astype(np.int64), score, k)
 
 
-def _member_mask(sorted_ids: np.ndarray, cand: np.ndarray) -> np.ndarray:
-    """True where cand[i] appears in sorted_ids (both int64-comparable,
-    sorted_ids ascending) — one searchsorted, no decode, no Python set."""
-    if cand.size == 0 or sorted_ids.size == 0:
-        return np.zeros(cand.size, dtype=bool)
-    pos = np.searchsorted(sorted_ids, cand)
-    ok = pos < sorted_ids.size
-    out = np.zeros(cand.size, dtype=bool)
-    out[ok] = sorted_ids[pos[ok]] == cand[ok]
-    return out
+def _phrase_hits(cols: dict, terms: list[str], n_cand: int, slop: int = 0,
+                 unordered: bool = False) -> np.ndarray:
+    """Mask over the n_cand candidates of `cols` (positions present for
+    every term): True where `terms` — phrase order, repeats allowed —
+    occur adjacently (slop=0), as an ordered chain spanning at most
+    (m-1)+slop positions (slop>0), or, with `unordered` (exactly two
+    terms), within `slop` positions of each other in either order.
 
-
-def _topk_single_decoded(pl, idf: float, avgdl: float, k: int,
-                         dead: np.ndarray = _NO_DEAD,
-                         scope: np.ndarray | None = None, neg_pls: list = ()):
-    """Single-term top-k over a PRE-DECODED posting list — the serving
-    decoded-LRU hot path. No block pruning (there is nothing left to
-    skip once the list is in memory as arrays); scores are the same
-    idf * _u_exact as _topk_single, so rank/score are bit-identical
-    (elementwise scoring commutes with filtering; pinned by
-    tests/test_local_serving.py)."""
-    lids = pl.docids.astype(np.int64)
-    scores = idf * _u_exact(pl.tfs, pl.doclens, avgdl)
-    if dead.size:
-        alive = ~np.isin(lids, dead)
-        lids, scores = lids[alive], scores[alive]
-    if scope is not None:
-        m = np.isin(lids, scope)
-        lids, scores = lids[m], scores[m]
-    for _t, npl in neg_pls:
-        if lids.size == 0:
-            break
-        keep = ~_member_mask(npl.docids.astype(np.int64), lids)
-        lids, scores = lids[keep], scores[keep]
-    return _select_topk_with_ties(lids, scores, k)
-
-
-def _shard_kernel_and_decoded(term_pls: list, idf: dict[str, float],
-                              avgdl: float, k: int,
-                              dead: np.ndarray = _NO_DEAD,
-                              scope: np.ndarray | None = None,
-                              neg_pls: list = ()):
-    """Conjunctive kernel over PRE-DECODED posting lists: term_pls =
-    [(term, PostingList)], all query terms present (caller enforces).
-    Same evaluation order as _shard_kernel_and — rarest list drives,
-    dead/scope/negation applied to the driver before intersection, exact
-    scores summed in lexicographic term order — so rank/score are
-    bit-identical to the encoded kernel (same float ops on the same
-    values; the encoded kernel's pruning is exact, so skipping it cannot
-    change results)."""
-    term_pls = sorted(term_pls, key=lambda tp: tp[1].docids.size)
-    t0, pl0 = term_pls[0]
-    cand = pl0.docids  # uint64 ascending
-    cols = {t0: (pl0.tfs, pl0.doclens)}
-    if dead.size:
-        alive = ~np.isin(cand.astype(np.int64), dead)
-        cand = cand[alive]
-        cols[t0] = (pl0.tfs[alive], pl0.doclens[alive])
-    if scope is not None:
-        m = np.isin(cand.astype(np.int64), scope)
-        tfs0, dls0 = cols[t0]
-        cand, cols[t0] = cand[m], (tfs0[m], dls0[m])
-    for _t, npl in neg_pls:
-        if cand.size == 0:
-            break
-        keep = ~_member_mask(npl.docids, cand)
-        if not keep.all():
-            tfs0, dls0 = cols[t0]
-            cand, cols[t0] = cand[keep], (tfs0[keep], dls0[keep])
-    for t, pl in term_pls[1:]:
-        if cand.size == 0:
-            return []
-        pos = np.searchsorted(pl.docids, cand)
-        ok = pos < pl.docids.size
-        keep = np.zeros(cand.size, dtype=bool)
-        keep[ok] = pl.docids[pos[ok]] == cand[ok]
-        sel = pos[keep]
-        for tt in list(cols):
-            cols[tt] = (cols[tt][0][keep], cols[tt][1][keep])
-        cols[t] = (pl.tfs[sel], pl.doclens[sel])
-        cand = cand[keep]
-    if cand.size == 0:
-        return []
-    score = np.zeros(cand.size, dtype=np.float64)
-    for t in sorted(cols):
-        tfs, dls = cols[t]
-        score += idf[t] * _u_exact(tfs, dls, avgdl)
-    return _select_topk_with_ties(cand.astype(np.int64), score, k)
-
-
-def _shard_kernel_or_decoded(term_pls: list, idf: dict[str, float],
-                             avgdl: float, k: int,
-                             dead: np.ndarray = _NO_DEAD,
-                             scope: np.ndarray | None = None):
-    """Disjunctive kernel over PRE-DECODED posting lists — union via
-    np.unique, contributions scatter-added in lexicographic term order,
-    exactly like _shard_kernel_or's unpruned path (whose pruned path is
-    exact too), so rank/score are bit-identical."""
-    term_pls = sorted(term_pls, key=lambda tp: tp[0])
-    union = np.unique(np.concatenate([pl.docids for _, pl in term_pls]))
-    if dead.size:
-        union = union[~np.isin(union.astype(np.int64), dead)]
-    if scope is not None:
-        union = union[np.isin(union.astype(np.int64), scope)]
-    score = np.zeros(union.size, dtype=np.float64)
-    for t, pl in term_pls:  # lexicographic order
-        pos = np.searchsorted(union, pl.docids)
-        ok = pos < union.size
-        ok[ok] = union[pos[ok]] == pl.docids[ok]
-        contrib = idf[t] * _u_exact(pl.tfs, pl.doclens, avgdl)
-        score[pos[ok]] += contrib[ok]
-    return _select_topk_with_ties(union.astype(np.int64), score, k)
-
-
-def _shard_kernel_phrase(term_rows: list, idf: dict[str, float], avgdl: float,
-                         k: int, dead: np.ndarray = _NO_DEAD, slop: int = 0,
-                         unordered: bool = False):
-    """Exact phrase evaluation of one shard. term_rows: [(term,
-    EncodedList)] in PHRASE order (repeats allowed). Docid intersection
-    drives block-selective decode exactly like the AND kernel; positions
-    are decoded ONLY for candidate blocks and adjacency is verified by
-    chained intersection of per-term positions shifted by their phrase
-    offset. Matching docs score standard BM25 over the phrase's distinct
-    terms (lexicographic sum order — oracle bit-parity)."""
-    m = len(term_rows)
-    drive = min(range(m), key=lambda i: term_rows[i][1].n)
-    pl0 = codec.decode_postings(
-        term_rows[drive][1], with_positions=True, flat_positions=True
-    )
-    cand = pl0.docids
-    # per_term[i] = (tfs, doclens, flat absolute positions) — positions
-    # stay ONE flat array per term (per-posting boundaries are the tfs);
-    # filtering/gathering is vectorized, never a per-doc list walk
-    per_term: dict[int, tuple] = {drive: (pl0.tfs, pl0.doclens, pl0.positions)}
-
-    def _filter_cols(tfs, dls, flat, keep):
-        return tfs[keep], dls[keep], flat[np.repeat(keep, tfs.astype(np.int64))]
-
-    if dead.size:
-        alive = ~np.isin(cand.astype(np.int64), dead)
-        per_term[drive] = _filter_cols(*per_term[drive], alive)
-        cand = cand[alive]
-    for i in sorted(range(m), key=lambda i: term_rows[i][1].n):
-        if i == drive:
-            continue
-        if cand.size == 0:
-            return []
-        enc = term_rows[i][1]
-        nblocks = enc.bmax_docid.size
-        blocks = _candidate_blocks(enc, cand.astype(np.int64))
-        valid = blocks < nblocks
-        ublocks = np.unique(blocks[valid])
-        pl = codec.decode_blocks(enc, ublocks, with_positions=True, flat_positions=True)
-        cand_v = cand[valid]
-        pos = np.searchsorted(pl.docids, cand_v)
-        ok = pos < pl.docids.size
-        match = np.zeros(cand_v.size, dtype=bool)
-        match[ok] = pl.docids[pos[ok]] == cand_v[ok]
-        keep = np.zeros(cand.size, dtype=bool)
-        keep[np.flatnonzero(valid)[match]] = True
-        sel = pos[match]
-        for tt in list(per_term):
-            per_term[tt] = _filter_cols(*per_term[tt], keep)
-        # vectorized segment gather of pl's flat positions at postings `sel`
-        cnt = pl.tfs.astype(np.int64)
-        starts = np.zeros(cnt.size + 1, dtype=np.int64)
-        np.cumsum(cnt, out=starts[1:])
-        seg_s, seg_l = starts[sel], cnt[sel]
-        out_starts = np.zeros(sel.size, dtype=np.int64)
-        if sel.size > 1:
-            np.cumsum(seg_l[:-1], out=out_starts[1:])
-        gidx = (
-            np.arange(int(seg_l.sum()), dtype=np.int64)
-            - np.repeat(out_starts, seg_l)
-            + np.repeat(seg_s, seg_l)
-        )
-        per_term[i] = (pl.tfs[sel], pl.doclens[sel], pl.positions[gidx])
-        cand = cand[keep]
-    if cand.size == 0:
-        return []
-    return _phrase_verify_score(
-        [t for t, _ in term_rows], per_term, cand, idf, avgdl, k, slop,
-        unordered=unordered,
-    )
-
-
-def _shard_kernel_phrase_decoded(
-    term_pls: list, idf: dict[str, float], avgdl: float,
-    k: int, dead: np.ndarray = _NO_DEAD, slop: int = 0,
-    unordered: bool = False,
-):
-    """Phrase kernel over PRE-DECODED posting lists: term_pls = [(term,
-    PostingList with flat absolute positions)] in phrase order. The
-    serving-node hot path — ServingIndex keeps a decoded-postings LRU so
-    repeated phrase/NEAR queries skip varbyte decode entirely.
-    Rank/score-identical to _shard_kernel_phrase by construction: same
-    intersection math on the same arrays, shared _phrase_verify_score
-    (pinned by tests/test_local_serving.py)."""
-    m = len(term_pls)
-    drive = min(range(m), key=lambda i: term_pls[i][1].docids.size)
-    pl0 = term_pls[drive][1]
-    cand = pl0.docids
-    per_term: dict[int, tuple] = {drive: (pl0.tfs, pl0.doclens, pl0.positions)}
-
-    def _filter_cols(tfs, dls, flat, keep):
-        return tfs[keep], dls[keep], flat[np.repeat(keep, tfs.astype(np.int64))]
-
-    if dead.size:
-        alive = ~np.isin(cand.astype(np.int64), dead)
-        per_term[drive] = _filter_cols(*per_term[drive], alive)
-        cand = cand[alive]
-    for i in sorted(range(m), key=lambda i: term_pls[i][1].docids.size):
-        if i == drive:
-            continue
-        if cand.size == 0:
-            return []
-        pl = term_pls[i][1]
-        pos = np.searchsorted(pl.docids, cand)
-        ok = pos < pl.docids.size
-        keep = np.zeros(cand.size, dtype=bool)
-        keep[ok] = pl.docids[pos[ok]] == cand[ok]
-        sel = pos[keep]
-        for tt in list(per_term):
-            per_term[tt] = _filter_cols(*per_term[tt], keep)
-        per_term[i] = (pl.tfs[sel], pl.doclens[sel], _gather_flat(pl, sel))
-        cand = cand[keep]
-    if cand.size == 0:
-        return []
-    return _phrase_verify_score(
-        [t for t, _ in term_pls], per_term, cand, idf, avgdl, k, slop,
-        unordered=unordered,
-    )
-
-
-def _phrase_verify_score(
-    terms: list[str], per_term: dict[int, tuple], cand: np.ndarray,
-    idf: dict[str, float], avgdl: float, k: int, slop: int,
-    unordered: bool = False,
-):
-    # `unordered` (exactly two distinct terms): classic A NEAR/k B — a
-    # candidate survives iff min |pos_A - pos_B| <= slop in EITHER order;
-    # verified with the same composite (cand<<32)|pos keys: one
-    # searchsorted of term A's keys into term B's gives each A-occurrence
-    # its successor AND predecessor B-position within the same candidate.
-    # positional verify, vectorized ACROSS candidates (no per-doc Python
-    # loop — round-2 verdict item 6): every (candidate, position) pair is
-    # one composite key (c << 32) | pos, ascending by construction, so one
-    # searchsorted per phrase term verifies every candidate at once.
-    # slop=0: a start survives term j iff key+j exists in term j's keys
-    # (exact adjacency). slop>0: ordered-NEAR — greedy next-position
-    # chaining (side='right' gives the smallest position > current WITHIN
-    # the same candidate, checked via the key's candidate bits), so
-    # `min span <= (m-1)+slop` stays an exact test.
+    Vectorized ACROSS candidates (no per-doc Python loop): every
+    (candidate, position) pair is one composite key (c << 32) | pos,
+    ascending by construction, so one searchsorted per phrase term
+    verifies every candidate at once. slop=0: a start survives term j
+    iff key+j exists in term j's keys. slop>0: greedy next-position
+    chaining (side='right' gives the smallest position > current WITHIN
+    the same candidate, checked via the key's candidate bits), so
+    `min span <= (m-1)+slop` stays an exact test. unordered: one
+    searchsorted of A's keys into B's gives each A-occurrence its
+    successor AND predecessor B-position within the same candidate."""
     m = len(terms)
-    n_cand = cand.size
-    span_max = (m - 1) + slop
 
     def _keys(j: int) -> np.ndarray:
-        tfs_j, _dls_j, flat_j = per_term[j]
+        tfs_j, _dls_j, flat_j = cols[terms[j]]
         c = np.repeat(np.arange(n_cand, dtype=np.int64), tfs_j.astype(np.int64))
         return (c << 32) | flat_j.astype(np.int64)  # ascending by construction
 
@@ -720,147 +531,47 @@ def _phrase_verify_score(
             nxt[in_rng] = kj[idx[in_rng]]
             live = in_rng & ((nxt >> 32) == c0)
             q = np.where(live, nxt, q)
-        live &= ((q & 0xFFFFFFFF) - p0) <= span_max
+        live &= ((q & 0xFFFFFFFF) - p0) <= (m - 1) + slop
         hit_c = np.unique(c0[live])
-    phrase_ok = np.zeros(n_cand, dtype=bool)
-    phrase_ok[hit_c] = True
-    if not phrase_ok.any():
-        return []
-    cand = cand[phrase_ok]
-    # distinct-term BM25 in lexicographic order (repeated phrase terms
-    # contribute once, like the oracle)
-    by_term: dict[str, tuple] = {}
-    for i, t in enumerate(terms):
-        tfs, dls, _ps = per_term[i]
-        by_term.setdefault(t, (tfs[phrase_ok], dls[phrase_ok]))
-    score = np.zeros(cand.size, dtype=np.float64)
-    for t in sorted(by_term):
-        tfs, dls = by_term[t]
-        score += idf[t] * _u_exact(tfs, dls, avgdl)
-    return _select_topk_with_ties(cand.astype(np.int64), score, k)
+    out = np.zeros(n_cand, dtype=bool)
+    out[hit_c] = True
+    return out
 
 
-def _gather_flat(pl, sel: np.ndarray) -> np.ndarray:
-    """Vectorized segment-gather of pl's flat position array at posting
-    indices `sel` (per-posting segment lengths are the tfs)."""
-    cnt = pl.tfs.astype(np.int64)
-    starts = np.zeros(cnt.size + 1, dtype=np.int64)
-    np.cumsum(cnt, out=starts[1:])
-    seg_s, seg_l = starts[sel], cnt[sel]
-    out_starts = np.zeros(sel.size, dtype=np.int64)
-    if sel.size > 1:
-        np.cumsum(seg_l[:-1], out=out_starts[1:])
-    gidx = (
-        np.arange(int(seg_l.sum()), dtype=np.int64)
-        - np.repeat(out_starts, seg_l)
-        + np.repeat(seg_s, seg_l)
-    )
-    return pl.positions[gidx]
-
-
-def _probe_pl(pl, cand: np.ndarray, with_positions: bool = False):
-    """Decoded-list analog of _probe_at: membership of sorted `cand` in a
-    PostingList plus aligned value columns — one searchsorted, no codec
-    work. Returns the same (keep, tfs, doclens, flat|None) contract."""
-    empty = np.zeros(0, dtype=np.int64)
-    if cand.size == 0:
-        return np.zeros(0, dtype=bool), empty, empty, (empty if with_positions else None)
-    pos = np.searchsorted(pl.docids, cand)
-    ok = pos < pl.docids.size
-    keep = np.zeros(cand.size, dtype=bool)
-    keep[ok] = pl.docids[pos[ok]] == cand[ok]
-    sel = pos[keep]
-    flat = _gather_flat(pl, sel) if with_positions else None
-    return keep, pl.tfs[sel], pl.doclens[sel], flat
-
-
-def _probe_any(x, cand: np.ndarray, with_positions: bool = False):
-    """Probe an EncodedList (block-selective decode) or an already-decoded
-    PostingList (direct searchsorted) with one calling convention — lets
-    the websearch kernels run unchanged over either representation (the
-    serving decoded-LRU path passes PostingLists)."""
-    if isinstance(x, codec.PostingList):
-        return _probe_pl(x, cand, with_positions)
-    return _probe_at(x, cand, with_positions)
-
-
-def _probe_at(enc: codec.EncodedList, cand: np.ndarray, with_positions: bool = False):
-    """Selectively decode `enc` at the sorted candidate docids `cand`:
-    only blocks that could contain a candidate are touched (block-max
-    docid skip). Returns (keep mask over cand, tfs, doclens,
-    flat_positions|None) — the value arrays aligned with cand[keep]."""
-    empty = np.zeros(0, dtype=np.int64)
-    if cand.size == 0:
-        return np.zeros(0, dtype=bool), empty, empty, (empty if with_positions else None)
-    blocks = _candidate_blocks(enc, cand.astype(np.int64))
-    valid = blocks < enc.bmax_docid.size
-    if not valid.any():
-        return (
-            np.zeros(cand.size, dtype=bool), empty, empty,
-            (empty if with_positions else None),
+def _shard_kernel_phrase(term_rows: list, idf: dict[str, float], avgdl: float,
+                         k: int, dead: np.ndarray = _NO_DEAD, slop: int = 0,
+                         unordered: bool = False):
+    """Exact phrase / NEAR evaluation of one shard. term_rows: [(term,
+    list)] in PHRASE order (repeats allowed). The rarest distinct term
+    drives, the others are probed at its candidates with positions
+    (_probe), and _phrase_hits verifies the positional constraint.
+    Matching docs score standard BM25 over the phrase's distinct terms
+    (repeated phrase terms contribute once, like the oracle;
+    lexicographic sum order — oracle bit-parity)."""
+    terms = [t for t, _ in term_rows]
+    rows = sorted(dict(term_rows).items(), key=lambda tr: tr[1].n)
+    cand, cols = _drive(rows[0], dead, with_positions=True)
+    cand, cols = _intersect(rows[1:], cand, cols, need_pos=terms)
+    if cand.size:
+        cand, cols = _take(
+            cand, cols, _phrase_hits(cols, terms, cand.size, slop, unordered)
         )
-    ublocks = np.unique(blocks[valid])
-    pl = codec.decode_blocks(
-        enc, ublocks, with_positions=with_positions, flat_positions=True
-    )
-    cand_v = cand[valid]
-    pos = np.searchsorted(pl.docids, cand_v)
-    ok = pos < pl.docids.size
-    match = np.zeros(cand_v.size, dtype=bool)
-    match[ok] = pl.docids[pos[ok]] == cand_v[ok]
-    keep = np.zeros(cand.size, dtype=bool)
-    keep[np.flatnonzero(valid)[match]] = True
-    sel = pos[match]
-    flat = _gather_flat(pl, sel) if with_positions else None
-    return keep, pl.tfs[sel], pl.doclens[sel], flat
+    return _topk(cand, cols, idf, avgdl, k)
 
 
 def _phrase_mask(ph_rows: list, cand: np.ndarray) -> np.ndarray:
     """Boolean mask over `cand` (sorted docids): True where the phrase —
-    ph_rows as (term, EncodedList) in PHRASE order, repeats allowed —
-    occurs at consecutive filtered-stream positions. Used for negated
-    quoted phrases ('-"a b"', Postgres !(a <-> b)), where the phrase's
-    terms are NOT required of the candidates, so presence and adjacency
-    are both probed selectively (candidate blocks only)."""
-    n = cand.size
-    out = np.zeros(n, dtype=bool)
-    if n == 0:
-        return out
-    alive = np.arange(n, dtype=np.int64)
-    sub = cand
-    flats: dict[str, tuple] = {}  # distinct term -> (tfs, flat) aligned with sub
-    for t in dict.fromkeys(t for t, _ in ph_rows):
-        enc = next(e for tt, e in ph_rows if tt == t)
-        keep, tfs, _dls, flat = _probe_any(enc, sub, with_positions=True)
-        if not keep.any():
-            return out  # some phrase term absent from every candidate
-        for tt in flats:
-            ptfs, pflat = flats[tt]
-            flats[tt] = (
-                ptfs[keep], pflat[np.repeat(keep, ptfs.astype(np.int64))]
-            )
-        alive, sub = alive[keep], sub[keep]
-        flats[t] = (tfs, flat)
-    nsub = sub.size
-    m = len(ph_rows)
-
-    def _keys(j: int) -> np.ndarray:
-        tfs_j, flat_j = flats[ph_rows[j][0]]
-        c = np.repeat(np.arange(nsub, dtype=np.int64), tfs_j.astype(np.int64))
-        return (c << 32) | flat_j.astype(np.int64)
-
-    cur = _keys(0)
-    for j in range(1, m):
-        if cur.size == 0:
-            break
-        kj = _keys(j)
-        tgt = cur + j
-        idx = np.searchsorted(kj, tgt)
-        ok = idx < kj.size
-        ok[ok] = kj[idx[ok]] == tgt[ok]
-        cur = cur[ok]
-    if cur.size:
-        out[alive[np.unique(cur >> 32)]] = True
+    ph_rows as (term, list) in PHRASE order, repeats allowed — occurs at
+    consecutive filtered-stream positions. Used for negated quoted
+    phrases ('-"a b"', Postgres !(a <-> b)), where the phrase's terms are
+    NOT required of the candidates, so presence and adjacency are both
+    probed at the candidates only."""
+    out = np.zeros(cand.size, dtype=bool)
+    distinct = dict(ph_rows)
+    sub, cols = _intersect(list(distinct.items()), cand, {}, need_pos=distinct)
+    if sub.size:
+        hit = _phrase_hits(cols, [t for t, _ in ph_rows], sub.size)
+        out[np.searchsorted(cand, sub[hit])] = True
     return out
 
 
@@ -872,94 +583,27 @@ def _websearch_match(
     neg_phrase_rows: list = (),
 ):
     """Match portion of one conjunctive websearch group on one shard:
-    pos_rows are the DISTINCT required (term, EncodedList) pairs (loose
-    terms + every quoted-phrase member), phrase_groups are token-lists
-    that must each occur adjacently, neg_rows exclude docs containing the
-    term, neg_phrase_rows exclude docs where that phrase occurs adjacently
-    ('-"a b"'). Returns (cand, cols) — surviving lids plus per-required-
-    term (tfs, doclens, flat_positions|None) columns for scoring. Exact;
-    positions decode only for phrase members and only in candidate
-    blocks."""
+    pos_rows are the DISTINCT required (term, list) pairs (loose terms +
+    every quoted-phrase member), phrase_groups are token-lists that must
+    each occur adjacently, neg_rows exclude docs containing the term,
+    neg_phrase_rows exclude docs where that phrase occurs adjacently
+    ('-"a b"'). Returns (cand, cols) — surviving docids plus per-required-
+    term (tfs, doclens, flat positions | None) columns for scoring. Exact;
+    positions are read only for phrase members and only at candidates."""
     need_pos = {t for ph in phrase_groups for t in ph}
     rows = sorted(pos_rows, key=lambda tr: tr[1].n)
-    t0, e0 = rows[0]
-    if isinstance(e0, codec.PostingList):  # decoded-LRU path: caller
-        pl0 = e0  # guarantees positions are present for need_pos terms
-    else:
-        pl0 = codec.decode_postings(
-            e0, with_positions=t0 in need_pos, flat_positions=True
-        )
-    cand = pl0.docids
-    cols: dict[str, tuple] = {
-        t0: (pl0.tfs, pl0.doclens, pl0.positions if t0 in need_pos else None)
-    }
-
-    def _filter(keep: np.ndarray) -> None:
-        nonlocal cand
-        for tt in list(cols):
-            tfs, dls, flat = cols[tt]
-            nf = (
-                flat[np.repeat(keep, tfs.astype(np.int64))]
-                if flat is not None
-                else None
-            )
-            cols[tt] = (tfs[keep], dls[keep], nf)
-        cand = cand[keep]
-
-    if dead.size:
-        _filter(~np.isin(cand.astype(np.int64), dead))
-    for t, enc in rows[1:]:
-        if cand.size == 0:
-            return cand, cols
-        wp = t in need_pos
-        # _probe_any = the block-selective decode + membership + segment
-        # gather this loop used to inline (same ops, shared with the
-        # phrase-mask path), or a direct searchsorted when the caller
-        # passes pre-decoded PostingLists (serving decoded-LRU path)
-        keep, tfs, dls, flat = _probe_any(enc, cand, with_positions=wp)
-        _filter(keep)
-        cols[t] = (tfs, dls, flat if wp else None)
-    if cand.size == 0:
-        return cand, cols
-    if neg_rows:
-        hit = _negated_mask(neg_rows, cand)
-        if hit.any():
-            _filter(~hit)
-    if cand.size == 0:
-        return cand, cols
-    # adjacency verification per quoted group — same composite-key sweep
-    # as the phrase kernel, all groups must hold
-    ok_all = np.ones(cand.size, dtype=bool)
-    n_cand = cand.size
+    cand, cols = _drive(
+        rows[0], dead, neg_rows=neg_rows, with_positions=rows[0][0] in need_pos
+    )
+    cand, cols = _intersect(rows[1:], cand, cols, need_pos)
     for ph in phrase_groups:
-        def _keys_of(t: str) -> np.ndarray:
-            tfs, _dls, flat = cols[t]
-            c = np.repeat(np.arange(n_cand, dtype=np.int64), tfs.astype(np.int64))
-            return (c << 32) | flat.astype(np.int64)
-
-        cur = _keys_of(ph[0])
-        for j in range(1, len(ph)):
-            if cur.size == 0:
-                break
-            kj = _keys_of(ph[j])
-            tgt = cur + j
-            idx = np.searchsorted(kj, tgt)
-            okk = idx < kj.size
-            okk[okk] = kj[idx[okk]] == tgt[okk]
-            cur = cur[okk]
-        g = np.zeros(n_cand, dtype=bool)
-        g[np.unique(cur >> 32)] = True
-        ok_all &= g
-    if not ok_all.all():
-        _filter(ok_all)
-    # negated quoted phrases: exclude candidates where the phrase occurs
-    # adjacently — probed selectively, the phrase terms are NOT required
+        if cand.size == 0:
+            break
+        cand, cols = _take(cand, cols, _phrase_hits(cols, ph, cand.size))
     for ph_rows in neg_phrase_rows:
         if cand.size == 0:
             break
-        hits = _phrase_mask(ph_rows, cand)
-        if hits.any():
-            _filter(~hits)
+        cand, cols = _take(cand, cols, ~_phrase_mask(ph_rows, cand))
     return cand, cols
 
 
@@ -981,13 +625,7 @@ def _shard_kernel_websearch(
     cand, cols = _websearch_match(
         pos_rows, phrase_groups, neg_rows, dead, neg_phrase_rows
     )
-    if cand.size == 0:
-        return []
-    score = np.zeros(cand.size, dtype=np.float64)
-    for t in sorted(cols):
-        tfs, dls, _flat = cols[t]
-        score += idf[t] * _u_exact(tfs, dls, avgdl)
-    return _select_topk_with_ties(cand.astype(np.int64), score, k)
+    return _topk(cand, cols, idf, avgdl, k)
 
 
 def _shard_kernel_websearch_or(
@@ -1002,12 +640,12 @@ def _shard_kernel_websearch_or(
     Postgres websearch 'or' keyword — AND binds tighter, so the query is
     an OR of groups). `groups` are (all_pos, neg, phrases, neg_phrases)
     from analyzer.parse_websearch_query; `by_term` maps this shard's terms
-    to EncodedLists. A doc matches iff ANY group holds; its score sums
+    to their lists. A doc matches iff ANY group holds; its score sums
     BM25 over ALL distinct positive terms of the whole query present in
     the doc (union-presence scoring, lexicographic order — the
     `search_or` convention; oracle bit-parity). Group matching reuses
-    _websearch_match; the scoring pass probes each positive term
-    selectively at the matched union (candidate blocks only)."""
+    _websearch_match; the scoring pass probes each positive term at the
+    matched union only."""
     union: np.ndarray | None = None
     for all_pos, neg, phrases, neg_phrases in groups:
         if any(t not in by_term for t in all_pos):
@@ -1028,13 +666,104 @@ def _shard_kernel_websearch_or(
         return []
     score = np.zeros(union.size, dtype=np.float64)
     for t in sorted({t for g in groups for t in g[0]}):
-        enc = by_term.get(t)
-        if enc is None:
+        x = by_term.get(t)
+        if x is None:
             continue
-        keep, tfs, dls, _ = _probe_any(enc, union)
+        keep, tfs, dls, _ = _probe(x, union)
         if keep.any():
             score[keep] += idf[t] * _u_exact(tfs, dls, avgdl)
     return _select_topk_with_ties(union.astype(np.int64), score, k)
+
+
+def _shard_lists(pdf: pd.DataFrame, n_docs: int):
+    """One shard group's segment rows -> ({term: EncodedList}, {term: idf}).
+    idf is computed here from the row's df with index.stats.bm25_idf — the
+    function the oracle and the serving node score with — never taken from
+    the JVM, whose log1p can differ by one ulp."""
+    by_term = {r["term"]: _enc_from_row(r) for _, r in pdf.iterrows()}
+    idf = {t: bm25_idf(n_docs, int(df)) for t, df in zip(pdf["term"], pdf["df"])}
+    return by_term, idf
+
+
+def _dead_of(dead_bc, shard: int) -> np.ndarray:
+    return dead_bc.value.get(shard, _NO_DEAD) if dead_bc is not None else _NO_DEAD
+
+
+def _shard_frame(shard: int, res: list) -> pd.DataFrame:
+    return pd.DataFrame(
+        {
+            "shard": [shard] * len(res),
+            "lid": [int(d) for d, _ in res],
+            "score": [float(s) for _, s in res],
+        }
+    )
+
+
+def _ranked(index: SegmentIndex, per_shard: DataFrame, k: int) -> DataFrame:
+    """Per-shard (shard, lid, score) top-k's -> the global top-k (docid,
+    score) by (-score, docid)."""
+    return (
+        index.rehydrate(per_shard)
+        .orderBy(F.desc("score"), F.asc("docid"))
+        .limit(k)
+        .select("docid", "score")
+    )
+
+
+def _ranked_batch(index: SegmentIndex, per_shard: DataFrame, k: int) -> DataFrame:
+    """Per-shard (qid, shard, lid, score) rows -> (qid, rnk, docid, score),
+    rank per query by (-score, docid)."""
+    from pyspark.sql import Window
+
+    w = Window.partitionBy("qid").orderBy(F.desc("score"), F.asc("docid"))
+    return (
+        index.rehydrate(per_shard)
+        .withColumn("rnk", F.row_number().over(w))
+        .filter(F.col("rnk") <= k)
+        .select("qid", "rnk", "docid", "score")
+        .orderBy("qid", "rnk")
+    )
+
+
+def _shared_memo(by_term: dict, use_count: dict, need_pos=()) -> dict:
+    """Batch paths: a term several queries of the batch use (the Zipf head
+    of a query log) decodes ONCE per task as a MemoList — every query after
+    the first runs decode-free; single-query terms stay encoded (probed
+    selectively). Positions decode only for terms in need_pos."""
+    return {
+        t: codec.MemoList(
+            x, codec.decode_postings(x, with_positions=t in need_pos, flat_positions=True)
+        )
+        if use_count.get(t, 0) > 1
+        else x
+        for t, x in by_term.items()
+    }
+
+
+def _phrase_topk(index: SegmentIndex, terms: list[str], k: int, slop: int,
+                 unordered: bool = False) -> DataFrame:
+    if not terms:
+        return index.spark.createDataFrame([], RESULT_SCHEMA)
+    avgdl = index.stats.avgdl
+    n_docs = index.stats.n_docs
+    dead_bc = index.dead_broadcast()
+
+    def run_shard(key, pdf: pd.DataFrame) -> pd.DataFrame:
+        shard = int(key[0])
+        by_term, idf = _shard_lists(pdf, n_docs)
+        if any(t not in by_term for t in terms):
+            return _shard_frame(shard, [])
+        res = _shard_kernel_phrase(
+            [(t, by_term[t]) for t in terms], idf, avgdl, k,
+            _dead_of(dead_bc, shard), slop, unordered,
+        )
+        return _shard_frame(shard, res)
+
+    segs = index.segments_with_idf(sorted(set(terms)))
+    per_shard = segs.groupBy("shard").applyInPandas(
+        run_shard, schema="shard int, lid long, score double"
+    )
+    return _ranked(index, per_shard, k)
 
 
 def bm25_topk_phrase(
@@ -1045,43 +774,8 @@ def bm25_topk_phrase(
     backend/migrations/003:32). Returns DataFrame(docid, score) by
     (-score, docid) — rank/score-identical to OracleIndex.search_phrase
     (tested)."""
-    spark = index.spark
     _aq, _tok, _sg = _analyzers_for(index)
-    terms = _tok(phrase)
-    if not terms:
-        return spark.createDataFrame([], RESULT_SCHEMA)
-    distinct = sorted(set(terms))
-    avgdl = index.stats.avgdl
-    dead_bc = index.dead_broadcast()
-    phrase_terms = list(terms)  # phrase order, repeats preserved
-
-    def run_shard(key, pdf: pd.DataFrame) -> pd.DataFrame:
-        shard = int(key[0])
-        dead = dead_bc.value.get(shard, _NO_DEAD) if dead_bc is not None else _NO_DEAD
-        by_term = {r["term"]: _enc_from_row(r) for _, r in pdf.iterrows()}
-        idf_b = {r["term"]: float(r["idf"]) for _, r in pdf.iterrows()}
-        if any(t not in by_term for t in phrase_terms):
-            return pd.DataFrame({"shard": [], "lid": [], "score": []})
-        rows = [(t, by_term[t]) for t in phrase_terms]
-        res = _shard_kernel_phrase(rows, idf_b, avgdl, k, dead, slop)
-        return pd.DataFrame(
-            {
-                "shard": [shard] * len(res),
-                "lid": [int(d) for d, _ in res],
-                "score": [float(s) for _, s in res],
-            }
-        )
-
-    segs = index.segments_with_idf(distinct)
-    per_shard = segs.groupBy("shard").applyInPandas(
-        run_shard, schema="shard int, lid long, score double"
-    )
-    return (
-        index.rehydrate(per_shard)
-        .orderBy(F.desc("score"), F.asc("docid"))
-        .limit(k)
-        .select("docid", "score")
-    )
+    return _phrase_topk(index, _tok(phrase), k, slop)
 
 
 def bm25_topk_near_unordered(
@@ -1097,7 +791,6 @@ def bm25_topk_near_unordered(
     is the ordered m-term chain). Rank/score-identical to
     OracleIndex.search_near_unordered and ServingIndex.search_near_unordered
     (tested)."""
-    spark = index.spark
     _aq, _tok, _sg = _analyzers_for(index)
     terms = _tok(query)
     if len(terms) != 2 or terms[0] == terms[1]:
@@ -1106,39 +799,7 @@ def bm25_topk_near_unordered(
             f"operator; got {terms!r} (use bm25_topk_phrase(slop) for the "
             "ordered chain)"
         )
-    avgdl = index.stats.avgdl
-    dead_bc = index.dead_broadcast()
-    pair = list(terms)
-
-    def run_shard(key, pdf: pd.DataFrame) -> pd.DataFrame:
-        shard = int(key[0])
-        dead = dead_bc.value.get(shard, _NO_DEAD) if dead_bc is not None else _NO_DEAD
-        by_term = {r["term"]: _enc_from_row(r) for _, r in pdf.iterrows()}
-        idf_b = {r["term"]: float(r["idf"]) for _, r in pdf.iterrows()}
-        if any(t not in by_term for t in pair):
-            return pd.DataFrame({"shard": [], "lid": [], "score": []})
-        rows = [(t, by_term[t]) for t in pair]
-        res = _shard_kernel_phrase(
-            rows, idf_b, avgdl, k, dead, slop=dist, unordered=True
-        )
-        return pd.DataFrame(
-            {
-                "shard": [shard] * len(res),
-                "lid": [int(d) for d, _ in res],
-                "score": [float(s) for _, s in res],
-            }
-        )
-
-    segs = index.segments_with_idf(sorted(set(terms)))
-    per_shard = segs.groupBy("shard").applyInPandas(
-        run_shard, schema="shard int, lid long, score double"
-    )
-    return (
-        index.rehydrate(per_shard)
-        .orderBy(F.desc("score"), F.asc("docid"))
-        .limit(k)
-        .select("docid", "score")
-    )
+    return _phrase_topk(index, terms, k, dist, unordered=True)
 
 
 def bm25_topk_wand(
@@ -1170,10 +831,15 @@ def bm25_topk_wand(
     so it never materializes on the driver (a 10^8-id caller scope at
     100 TB stays distributed end to end).
 
-    Single Spark job: idf rides into the shard kernels via a broadcast
-    join of the (pruned) term_stats — no separate driver-side idf lookup
-    job. AND semantics stay exact when a query term is unknown globally:
-    no shard can then hold all terms, so every kernel returns empty."""
+    A point query runs three Spark jobs (4 stages, ~8 tasks; counted in
+    perfbench/README.md): the term-dictionary broadcast, the shard
+    kernels, and the docmap rehydrate broadcast — AQE is off on the
+    index's query session, so each broadcast is its own job. df rides
+    into the shard kernels with the segment rows (segments_with_idf), so
+    there is no separate driver-side lookup; idf is computed in the
+    kernels. AND semantics stay exact when a query term is unknown
+    globally: no shard can then hold all terms, so every kernel returns
+    empty."""
     spark = index.spark
     if pre_analyzed is not None:
         terms = list(dict.fromkeys(pre_analyzed))
@@ -1191,6 +857,7 @@ def bm25_topk_wand(
             return spark.createDataFrame([], RESULT_SCHEMA)  # contradiction
     n_terms = len(terms)
     avgdl = index.stats.avgdl
+    n_docs = index.stats.n_docs
     mode_and = mode == "and"
     dead_bc = index.dead_broadcast()  # broadcast {shard: lid array} (or None)
     scope_df = scope_bc = None
@@ -1208,34 +875,25 @@ def bm25_topk_wand(
     neg_set = set(neg_terms)
 
     def eval_shard(shard: int, pdf: pd.DataFrame, scope) -> pd.DataFrame:
-        dead = dead_bc.value.get(shard, _NO_DEAD) if dead_bc is not None else _NO_DEAD
-        all_rows = [(r["term"], _enc_from_row(r)) for _, r in pdf.iterrows()]
-        rows = [tr for tr in all_rows if tr[0] not in neg_set]
-        neg_rows = [tr for tr in all_rows if tr[0] in neg_set]
-        idf_b = {r["term"]: float(r["idf"]) for _, r in pdf.iterrows()}
+        dead = _dead_of(dead_bc, shard)
+        by_term, idf = _shard_lists(pdf, n_docs)
+        rows = [(t, x) for t, x in by_term.items() if t not in neg_set]
+        neg_rows = [(t, x) for t, x in by_term.items() if t in neg_set]
         if mode_and:
             if len(rows) < n_terms:
-                return pd.DataFrame({"shard": [], "lid": [], "score": []})
+                return _shard_frame(shard, [])
             if n_terms == 1:
                 res = _topk_single(
-                    rows[0][1], idf_b[rows[0][0]], avgdl, k, dead, scope,
+                    rows[0][1], idf[rows[0][0]], avgdl, k, dead, scope,
                     neg_rows,
                 )
             else:
                 res = _shard_kernel_and(
-                    rows, idf_b, avgdl, k, dead, scope=scope, neg_rows=neg_rows
+                    rows, idf, avgdl, k, dead, scope=scope, neg_rows=neg_rows
                 )
         else:
-            res = _shard_kernel_or(rows, idf_b, avgdl, k, dead, scope=scope)
-        if not res:
-            return pd.DataFrame({"shard": [], "lid": [], "score": []})
-        return pd.DataFrame(
-            {
-                "shard": [shard] * len(res),
-                "lid": [int(d) for d, _ in res],
-                "score": [float(s) for _, s in res],
-            }
-        )
+            res = _shard_kernel_or(rows, idf, avgdl, k, dead, scope=scope)
+        return _shard_frame(shard, res)
 
     def run_shard(key, pdf: pd.DataFrame) -> pd.DataFrame:
         shard = int(key[0])
@@ -1251,7 +909,7 @@ def bm25_topk_wand(
         shard = int(key[0])
         scope = np.sort(scope_pdf["lid"].to_numpy().astype(np.int64))
         if len(seg_pdf) == 0 or scope.size == 0:
-            return pd.DataFrame({"shard": [], "lid": [], "score": []})
+            return _shard_frame(shard, [])
         return eval_shard(shard, seg_pdf, scope)
 
     segs = index.segments_with_idf(terms + neg_terms)
@@ -1310,6 +968,7 @@ def bm25_topk_websearch(
         return spark.createDataFrame([], RESULT_SCHEMA)
 
     avgdl = index.stats.avgdl
+    n_docs = index.stats.n_docs
     dead_bc = index.dead_broadcast()
 
     if len(groups) == 1 and not groups[0][3]:
@@ -1321,28 +980,18 @@ def bm25_topk_websearch(
             return bm25_topk_wand(
                 index, query, k, exclude_terms=neg, pre_analyzed=all_pos
             )
-        neg_set = set(neg)
-        n_pos = len(all_pos)
 
         def run_shard(key, pdf: pd.DataFrame) -> pd.DataFrame:
             shard = int(key[0])
-            dead = dead_bc.value.get(shard, _NO_DEAD) if dead_bc is not None else _NO_DEAD
-            all_rows = [(r["term"], _enc_from_row(r)) for _, r in pdf.iterrows()]
-            idf_b = {r["term"]: float(r["idf"]) for _, r in pdf.iterrows()}
-            pos_rows = [tr for tr in all_rows if tr[0] not in neg_set]
-            neg_rows = [tr for tr in all_rows if tr[0] in neg_set]
-            if len(pos_rows) < n_pos:
-                return pd.DataFrame({"shard": [], "lid": [], "score": []})
+            by_term, idf = _shard_lists(pdf, n_docs)
+            if any(t not in by_term for t in all_pos):
+                return _shard_frame(shard, [])
             res = _shard_kernel_websearch(
-                pos_rows, phrases, neg_rows, idf_b, avgdl, k, dead
+                [(t, by_term[t]) for t in all_pos], phrases,
+                [(t, by_term[t]) for t in neg if t in by_term],
+                idf, avgdl, k, _dead_of(dead_bc, shard),
             )
-            return pd.DataFrame(
-                {
-                    "shard": [shard] * len(res),
-                    "lid": [int(d) for d, _ in res],
-                    "score": [float(s) for _, s in res],
-                }
-            )
+            return _shard_frame(shard, res)
 
         scan_terms = all_pos + neg
     else:
@@ -1356,30 +1005,43 @@ def bm25_topk_websearch(
 
         def run_shard(key, pdf: pd.DataFrame) -> pd.DataFrame:
             shard = int(key[0])
-            dead = dead_bc.value.get(shard, _NO_DEAD) if dead_bc is not None else _NO_DEAD
-            by_term = {r["term"]: _enc_from_row(r) for _, r in pdf.iterrows()}
-            idf_b = {r["term"]: float(r["idf"]) for _, r in pdf.iterrows()}
+            by_term, idf = _shard_lists(pdf, n_docs)
             res = _shard_kernel_websearch_or(
-                groups, by_term, idf_b, avgdl, k, dead
+                groups, by_term, idf, avgdl, k, _dead_of(dead_bc, shard)
             )
-            return pd.DataFrame(
-                {
-                    "shard": [shard] * len(res),
-                    "lid": [int(d) for d, _ in res],
-                    "score": [float(s) for _, s in res],
-                }
-            )
+            return _shard_frame(shard, res)
 
     segs = index.segments_with_idf(scan_terms)
     per_shard = segs.groupBy("shard").applyInPandas(
         run_shard, schema="shard int, lid long, score double"
     )
-    return (
-        index.rehydrate(per_shard)
-        .orderBy(F.desc("score"), F.asc("docid"))
-        .limit(k)
-        .select("docid", "score")
+    return _ranked(index, per_shard, k)
+
+
+BATCH_RESULT_SCHEMA = "qid string, rnk int, docid long, score double"
+_BATCH_SHARD_SCHEMA = "qid string, shard int, lid long, score double"
+
+
+def _batch_frame(shard: int, out: list) -> pd.DataFrame:
+    """[(qid, shard-local top-k list)] -> one task's output rows."""
+    rows = [(q, int(d), float(s)) for q, res in out for d, s in res]
+    return pd.DataFrame(
+        {
+            "qid": [q for q, _, _ in rows],
+            "shard": [shard] * len(rows),
+            "lid": [d for _, d, _ in rows],
+            "score": [s for _, _, s in rows],
+        }
     )
+
+
+def _use_count(term_sets) -> dict[str, int]:
+    """How many queries of a batch use each term."""
+    count: dict[str, int] = {}
+    for ts in term_sets:
+        for t in set(ts):
+            count[t] = count.get(t, 0) + 1
+    return count
 
 
 def bm25_topk_websearch_batch(
@@ -1391,8 +1053,6 @@ def bm25_topk_websearch_batch(
     applyInPandas over shards where each kernel answers every query it
     can serve, one per-query rank window. Returns (qid, rnk, docid,
     score) — identical to per-query bm25_topk_websearch (tested)."""
-    from pyspark.sql import Window
-
     from honeywell_search_engine_spark.functions.analyzer import parse_websearch_query
 
     spark = index.spark
@@ -1413,9 +1073,10 @@ def bm25_topk_websearch_batch(
     if not scan_terms:
         return spark.createDataFrame([], BATCH_RESULT_SCHEMA)
     avgdl = index.stats.avgdl
+    n_docs = index.stats.n_docs
     dead_bc = index.dead_broadcast()
 
-    use_count: dict[str, int] = {}
+    q_terms = []
     need_pos: set = set()
     for groups in parsed.values():
         q_t = set()
@@ -1424,29 +1085,15 @@ def bm25_topk_websearch_batch(
             for ph in list(g[2]) + list(g[3]):
                 q_t |= set(ph)
                 need_pos |= set(ph)
-        for t in q_t:
-            use_count[t] = use_count.get(t, 0) + 1
+        q_terms.append(q_t)
+    use_count = _use_count(q_terms)
 
     def run_shard(key, pdf: pd.DataFrame) -> pd.DataFrame:
         shard = int(key[0])
-        dead = dead_bc.value.get(shard, _NO_DEAD) if dead_bc is not None else _NO_DEAD
-        # shared-term memoization: see bm25_topk_wand_batch — one decode
-        # per task (positions only where some phrase needs them)
-        by_term = {}
-        for _, r in pdf.iterrows():
-            enc = _enc_from_row(r)
-            if use_count.get(r["term"], 0) > 1:
-                enc = codec.MemoList(
-                    enc,
-                    codec.decode_postings(
-                        enc,
-                        with_positions=r["term"] in need_pos,
-                        flat_positions=True,
-                    ),
-                )
-            by_term[r["term"]] = enc
-        idf_b = {r["term"]: float(r["idf"]) for _, r in pdf.iterrows()}
-        out_q, out_d, out_s = [], [], []
+        dead = _dead_of(dead_bc, shard)
+        by_term, idf = _shard_lists(pdf, n_docs)
+        by_term = _shared_memo(by_term, use_count, need_pos)
+        out = []
         for qid, groups in parsed.items():
             if len(groups) == 1 and not groups[0][3]:
                 all_pos, neg, phrases, _ = groups[0]
@@ -1456,41 +1103,29 @@ def bm25_topk_websearch_batch(
                 neg_rows = [(t, by_term[t]) for t in neg if t in by_term]
                 if phrases:
                     res = _shard_kernel_websearch(
-                        pos_rows, phrases, neg_rows, idf_b, avgdl, k, dead
+                        pos_rows, phrases, neg_rows, idf, avgdl, k, dead
                     )
                 elif len(all_pos) == 1:
                     res = _topk_single(
-                        pos_rows[0][1], idf_b[pos_rows[0][0]], avgdl, k, dead,
+                        pos_rows[0][1], idf[pos_rows[0][0]], avgdl, k, dead,
                         None, neg_rows,
                     )
                 else:
                     res = _shard_kernel_and(
-                        pos_rows, idf_b, avgdl, k, dead, neg_rows=neg_rows
+                        pos_rows, idf, avgdl, k, dead, neg_rows=neg_rows
                     )
             else:  # OR groups / negated phrases: group-union kernel
                 res = _shard_kernel_websearch_or(
-                    groups, by_term, idf_b, avgdl, k, dead
+                    groups, by_term, idf, avgdl, k, dead
                 )
-            for d, s in res:
-                out_q.append(qid)
-                out_d.append(int(d))
-                out_s.append(float(s))
-        return pd.DataFrame(
-            {"qid": out_q, "shard": [shard] * len(out_q), "lid": out_d, "score": out_s}
-        )
+            out.append((qid, res))
+        return _batch_frame(shard, out)
 
     segs = index.segments_with_idf(scan_terms)
     per_shard = segs.groupBy("shard").applyInPandas(
-        run_shard, schema="qid string, shard int, lid long, score double"
+        run_shard, schema=_BATCH_SHARD_SCHEMA
     )
-    hydrated = index.rehydrate(per_shard)
-    w = Window.partitionBy("qid").orderBy(F.desc("score"), F.asc("docid"))
-    return (
-        hydrated.withColumn("rnk", F.row_number().over(w))
-        .filter(F.col("rnk") <= k)
-        .select("qid", "rnk", "docid", "score")
-        .orderBy("qid", "rnk")
-    )
+    return _ranked_batch(index, per_shard, k)
 
 
 def bm25_topk_phrase_batch(
@@ -1501,8 +1136,6 @@ def bm25_topk_phrase_batch(
     scan over the union of all phrases' terms, per-shard kernels answer
     every phrase they can serve, one rank window). Returns
     (qid, rnk, docid, score) — identical to per-query bm25_topk_phrase."""
-    from pyspark.sql import Window
-
     spark = index.spark
     _aq, _tok, _sg = _analyzers_for(index)  # stemmed index -> stemmed queries
     q_terms = {qid: _tok(q) for qid, q in queries.items()}
@@ -1511,60 +1144,30 @@ def bm25_topk_phrase_batch(
     if not scan_terms:
         return spark.createDataFrame([], BATCH_RESULT_SCHEMA)
     avgdl = index.stats.avgdl
+    n_docs = index.stats.n_docs
     dead_bc = index.dead_broadcast()
-
-    use_count: dict[str, int] = {}
-    for ts in live.values():
-        for t in set(ts):
-            use_count[t] = use_count.get(t, 0) + 1
+    use_count = _use_count(live.values())
 
     def run_shard(key, pdf: pd.DataFrame) -> pd.DataFrame:
         shard = int(key[0])
-        dead = dead_bc.value.get(shard, _NO_DEAD) if dead_bc is not None else _NO_DEAD
-        # shared-term memoization (positions included): see
-        # bm25_topk_wand_batch — one decode per task, not per query
-        by_term = {}
-        for _, r in pdf.iterrows():
-            enc = _enc_from_row(r)
-            if use_count.get(r["term"], 0) > 1:
-                enc = codec.MemoList(
-                    enc,
-                    codec.decode_postings(
-                        enc, with_positions=True, flat_positions=True
-                    ),
-                )
-            by_term[r["term"]] = enc
-        idf_b = {r["term"]: float(r["idf"]) for _, r in pdf.iterrows()}
-        out_q, out_d, out_s = [], [], []
+        dead = _dead_of(dead_bc, shard)
+        by_term, idf = _shard_lists(pdf, n_docs)
+        by_term = _shared_memo(by_term, use_count, need_pos=by_term)
+        out = []
         for qid, ts in live.items():
             if any(t not in by_term for t in ts):
                 continue
             res = _shard_kernel_phrase(
-                [(t, by_term[t]) for t in ts], idf_b, avgdl, k, dead, slop
+                [(t, by_term[t]) for t in ts], idf, avgdl, k, dead, slop
             )
-            for d, s in res:
-                out_q.append(qid)
-                out_d.append(int(d))
-                out_s.append(float(s))
-        return pd.DataFrame(
-            {"qid": out_q, "shard": [shard] * len(out_q), "lid": out_d, "score": out_s}
-        )
+            out.append((qid, res))
+        return _batch_frame(shard, out)
 
     segs = index.segments_with_idf(scan_terms)
     per_shard = segs.groupBy("shard").applyInPandas(
-        run_shard, schema="qid string, shard int, lid long, score double"
+        run_shard, schema=_BATCH_SHARD_SCHEMA
     )
-    hydrated = index.rehydrate(per_shard)
-    w = Window.partitionBy("qid").orderBy(F.desc("score"), F.asc("docid"))
-    return (
-        hydrated.withColumn("rnk", F.row_number().over(w))
-        .filter(F.col("rnk") <= k)
-        .select("qid", "rnk", "docid", "score")
-        .orderBy("qid", "rnk")
-    )
-
-
-BATCH_RESULT_SCHEMA = "qid string, rnk int, docid long, score double"
+    return _ranked_batch(index, per_shard, k)
 
 
 def bm25_topk_wand_batch(
@@ -1582,8 +1185,6 @@ def bm25_topk_wand_batch(
     Returns DataFrame(qid, rnk, docid, score), rank per query by
     (-score, docid) — identical results to per-query bm25_topk_wand
     (tested)."""
-    from pyspark.sql import Window
-
     spark = index.spark
     _aq, _tok, _sg = _analyzers_for(index)  # stemmed index -> stemmed queries
     q_terms = {qid: _aq(q) for qid, q in queries.items()}
@@ -1593,58 +1194,34 @@ def bm25_topk_wand_batch(
         return spark.createDataFrame([], BATCH_RESULT_SCHEMA)
     mode_and = mode == "and"
     avgdl = index.stats.avgdl
+    n_docs = index.stats.n_docs
     dead_bc = index.dead_broadcast()
-
-    use_count: dict[str, int] = {}
-    for ts in live_b.values():
-        for t in set(ts):
-            use_count[t] = use_count.get(t, 0) + 1
+    use_count = _use_count(live_b.values())
 
     def run_shard(key, pdf: pd.DataFrame) -> pd.DataFrame:
         shard = int(key[0])
-        dead = dead_bc.value.get(shard, _NO_DEAD) if dead_bc is not None else _NO_DEAD
-        # terms shared by several queries (the Zipf head of a query log)
-        # decode ONCE per task as a MemoList — every query after the
-        # first runs decode-free with block-max pruning intact;
-        # single-query terms stay encoded (selective decode only)
-        by_term = {}
-        for _, r in pdf.iterrows():
-            enc = _enc_from_row(r)
-            if use_count.get(r["term"], 0) > 1:
-                enc = codec.MemoList(enc, codec.decode_postings(enc))
-            by_term[r["term"]] = enc
-        idf_b = {r["term"]: float(r["idf"]) for _, r in pdf.iterrows()}
-        out_q, out_d, out_s = [], [], []
+        dead = _dead_of(dead_bc, shard)
+        by_term, idf = _shard_lists(pdf, n_docs)
+        by_term = _shared_memo(by_term, use_count)
+        out = []
         for qid, ts in live_b.items():
             rows = [(t, by_term[t]) for t in ts if t in by_term]
             if mode_and:
                 if len(rows) < len(ts):
                     continue  # some term absent in this shard => no AND hit here
                 if len(ts) == 1:
-                    res = _topk_single(rows[0][1], idf_b[rows[0][0]], avgdl, k, dead)
+                    res = _topk_single(rows[0][1], idf[rows[0][0]], avgdl, k, dead)
                 else:
-                    res = _shard_kernel_and(rows, idf_b, avgdl, k, dead)
+                    res = _shard_kernel_and(rows, idf, avgdl, k, dead)
             else:
                 if not rows:
                     continue
-                res = _shard_kernel_or(rows, idf_b, avgdl, k, dead)
-            for d, s in res:
-                out_q.append(qid)
-                out_d.append(int(d))
-                out_s.append(float(s))
-        return pd.DataFrame(
-            {"qid": out_q, "shard": [shard] * len(out_q), "lid": out_d, "score": out_s}
-        )
+                res = _shard_kernel_or(rows, idf, avgdl, k, dead)
+            out.append((qid, res))
+        return _batch_frame(shard, out)
 
     segs = index.segments_with_idf(scan_terms)
     per_shard = segs.groupBy("shard").applyInPandas(
-        run_shard, schema="qid string, shard int, lid long, score double"
+        run_shard, schema=_BATCH_SHARD_SCHEMA
     )
-    hydrated = index.rehydrate(per_shard)
-    w = Window.partitionBy("qid").orderBy(F.desc("score"), F.asc("docid"))
-    return (
-        hydrated.withColumn("rnk", F.row_number().over(w))
-        .filter(F.col("rnk") <= k)
-        .select("qid", "rnk", "docid", "score")
-        .orderBy("qid", "rnk")
-    )
+    return _ranked_batch(index, per_shard, k)

@@ -61,16 +61,13 @@ def seg_index(spark, pages_path, tmp_path_factory):
 
 
 @pytest.fixture(scope="session")
-def naive_index(spark, pages_path, tmp_path_factory):
-    from honeywell_search_engine_spark.index.corpus import (
-        docs_from_pages,
-        tokenized_docs,
-    )
-    from honeywell_search_engine_spark.index.naive import NaiveIndex, build_naive_index
-    from honeywell_search_engine_spark.sources.pages import read_pages
+def exhaustive(seg_index):
+    """The naive (exhaustive) engine: the serving kernels with block-max
+    pruning off. A shard list holds at most n_docs postings, so on a
+    corpus of at most FULLSCAN_MAX_POSTINGS docs every list is scored in
+    full — the lossless reference that WAND pruning is checked against."""
+    from honeywell_search_engine_spark.query import local as L
 
-    out = str(tmp_path_factory.mktemp("index") / "naive")
-    pages = read_pages(spark, pages_path)
-    tok = tokenized_docs(docs_from_pages(pages), pre_cleaned=False)
-    build_naive_index(tok, out, n_buckets=16)
-    return NaiveIndex(spark, out)
+    idx = L.ServingIndex(seg_index.path)
+    assert idx.n_docs <= L.FULLSCAN_MAX_POSTINGS
+    return idx

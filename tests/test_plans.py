@@ -3,10 +3,12 @@ must be visible in the plan, not assumed.
 
 - segment scans are partition-pruned by bucket and push the term filter;
 - pages scans prune columns (html not read unless extraction requested);
-- the naive BM25 plan ends in TakeOrderedAndProject (per-partition heaps),
+- the WAND query plan ends in TakeOrderedAndProject (per-partition heaps),
   never a global Sort;
 - the phase-2 encode plan contains NO Exchange (single-shuffle build).
 """
+
+import re
 
 from pyspark.sql import functions as F
 
@@ -35,13 +37,6 @@ def test_pages_scan_prunes_html(spark, pages_path):
     schema_part = plan.split("ReadSchema")[1][:300] if "ReadSchema" in plan else plan
     assert "html" not in schema_part, "html must be pruned from the scan"
     assert "lang" in plan  # pushed filter on lang
-
-
-def test_naive_topk_uses_takeordered(naive_index):
-    from honeywell_search_engine_spark.query.naive import bm25_topk_naive
-
-    df = bm25_topk_naive(naive_index, "data search", k=10)
-    assert "TakeOrderedAndProject" in _plan(df)
 
 
 def test_phase2_encode_plan_has_no_exchange(spark, seg_index):
@@ -227,16 +222,20 @@ def test_segment_index_point_query_session(spark, seg_index):
 def test_wand_sql_tail_plan_shape(seg_index):
     """The SQL-built wand query must keep the plan the DataFrame chain
     produced: partition-pruned segment scan with the term filter pushed,
-    broadcast idf join, and a TakeOrderedAndProject tail (never a global
-    Sort) — the py4j trim is a construction change, not a plan change."""
+    broadcast term-dictionary join, and a TakeOrderedAndProject tail
+    (never a global Sort) — the py4j trim is a construction change, not
+    a plan change."""
     from honeywell_search_engine_spark.query.wand import bm25_topk_wand
 
     df = bm25_topk_wand(seg_index, "data search", k=10)
     plan = physical_plan(df)
     assert "TakeOrderedAndProject" in plan
     assert "BroadcastHashJoin" in plan
-    assert plan.count("Sort ") == 0 or "Sort [" not in plan.split(
-        "TakeOrderedAndProject"
-    )[0]
+    # no global Sort anywhere: the only Sort this plan may hold is the
+    # local (global=false) one on `shard` that groupBy(shard).applyInPandas
+    # requires of its input
+    sorts = re.findall(r"Sort \[([^\]]*)\], (true|false)", plan)
+    assert len(sorts) == plan.count("Sort ["), plan  # every Sort parsed
+    assert all(g == "false" and c.startswith("shard") for c, g in sorts), sorts
     scan_part = plan.split("PushedFilters", 1)[1][:200] if "PushedFilters" in plan else ""
     assert "term" in scan_part

@@ -6,14 +6,14 @@ import shutil
 
 import pytest
 
-from honeywell_search_engine_spark.index.corpus import docs_from_pages, tokenized_docs
+from honeywell_search_engine_spark.index.corpus import docid_py, docs_from_pages, tokenized_docs
 from honeywell_search_engine_spark.index.segments import (
     SegmentIndex,
     build_segments,
     bucket_checksum,
 )
 from honeywell_search_engine_spark.query.wand import bm25_topk_wand
-from honeywell_search_engine_spark.sources.pages import read_pages, reference_queries
+from honeywell_search_engine_spark.sources.pages import marker_term, read_pages, reference_queries
 
 QUERIES = reference_queries()
 
@@ -35,15 +35,14 @@ def test_wand_bit_identical_to_oracle(seg_index, oracle, name):
     assert got == exp, name  # bit-exact scores AND identical ranks
 
 
-def test_wand_equals_naive(seg_index, naive_index):
-    """WAND pruning is lossless vs the exhaustive Catalyst engine."""
-    from honeywell_search_engine_spark.query.naive import bm25_topk_naive
-
-    for name in ("q01", "q06", "q10", "q12", "q14"):
-        q = QUERIES[name]
-        a = [(r["docid"], r["score"]) for r in bm25_topk_naive(naive_index, q, 10).collect()]
-        b = [(r["docid"], r["score"]) for r in bm25_topk_wand(seg_index, q, 10).collect()]
-        assert a == b, name
+def test_wand_equals_naive(seg_index, exhaustive):
+    """WAND pruning is lossless vs the exhaustive (unpruned) engine; the
+    planted marker with unbounded k checks the full hit set, not a top-k."""
+    cases = [(QUERIES[n], 10) for n in ("q01", "q06", "q10", "q12", "q14")]
+    for q, k in cases + [(marker_term(0), 10**6)]:
+        a = exhaustive.search(q, k=k)
+        b = [(r["docid"], r["score"]) for r in bm25_topk_wand(seg_index, q, k).collect()]
+        assert a == b and a, q
 
 
 def test_or_mode_superset(seg_index, oracle):
@@ -176,6 +175,45 @@ def test_phrase_subset_of_and(spark, seg_index, oracle, pages_pdf):
     assert ph_hits and ph_hits <= and_full
 
 
+def _brute_topk(lists, idf, avgdl, k, mode, dead=(), scope=None, neg=()):
+    """Exhaustive reference for the synthetic-list kernel tests: every
+    list decoded in full, tombstone / scope / negation filters applied
+    per doc, per-term contributions summed in lexicographic term order,
+    every row tied with the k-th score kept."""
+    from honeywell_search_engine_spark.index import codec
+
+    contrib = {}
+    for t, enc in lists:
+        pl = codec.decode_postings(enc)
+        parts = idf[t] * codec.bm25_u(pl.tfs, pl.doclens, avgdl)
+        contrib[t] = {int(d): float(c) for d, c in zip(pl.docids, parts)}
+    docsets = [set(c) for c in contrib.values()]
+    docs = set.intersection(*docsets) if mode == "and" else set.union(*docsets)
+    excluded = set(int(d) for d in dead)
+    for enc in neg:
+        excluded |= {int(d) for d in codec.decode_postings(enc).docids}
+    if scope is not None:
+        docs &= {int(d) for d in scope}
+    scored = []
+    for d in docs - excluded:
+        s = 0.0
+        for t in sorted(contrib):
+            if d in contrib[t]:
+                s += contrib[t][d]
+        scored.append((d, s))
+    scored.sort(key=lambda r: (-r[1], r[0]))
+    if len(scored) > k:
+        kth = scored[k - 1][1]
+        scored = [r for r in scored if r[1] >= kth]
+    return scored
+
+
+def _memo(enc):
+    from honeywell_search_engine_spark.index import codec
+
+    return codec.MemoList(enc, codec.decode_postings(enc))
+
+
 def test_and_score_bound_pruning_exact_and_cheaper(monkeypatch):
     """AND-mode score-bound pruning: results bit-identical to prune=False,
     strictly fewer blocks decoded (the verdict's 'decoded-block counter
@@ -208,9 +246,9 @@ def test_and_score_bound_pruning_exact_and_cheaper(monkeypatch):
     counts = {"blocks": 0}
     orig = codec.decode_blocks
 
-    def counting(enc, blocks, with_positions=False):
+    def counting(enc, blocks, **kw):
         counts["blocks"] += len(np.atleast_1d(blocks))
-        return orig(enc, blocks, with_positions)
+        return orig(enc, blocks, **kw)
 
     monkeypatch.setattr(
         "honeywell_search_engine_spark.query.wand.codec.decode_blocks", counting
@@ -224,6 +262,42 @@ def test_and_score_bound_pruning_exact_and_cheaper(monkeypatch):
 
     assert res_pruned == res_full  # bit-identical (docid AND float score)
     assert pruned_blocks < full_blocks, (pruned_blocks, full_blocks)
+
+    # every AND / single-term variant — prune on and off, EncodedList and
+    # MemoList inputs — equals the exhaustive reference under tombstone,
+    # scope and negation filters (each of which changes the top-10)
+    from honeywell_search_engine_spark.query.wand import _topk_single
+
+    neg = codec.encode_postings(docids[5::7], tf1[5::7], dls[5::7], avgdl)
+    filters = {
+        "none": {},
+        "dead": {"dead": np.sort(d0[:10:3].astype(np.int64))},
+        "scope": {"scope": docids[::16].astype(np.int64)},
+        "neg": {"neg": [neg]},
+    }
+    filters["all"] = {**filters["dead"], **filters["scope"], **filters["neg"]}
+    plain = _brute_topk(rows, idf, avgdl, 10, "and")
+    for name, f in filters.items():
+        exp = _brute_topk(rows, idf, avgdl, 10, "and", **f)
+        assert exp and (exp != plain) == (name != "none"), name
+        dead = f.get("dead", np.zeros(0, dtype=np.int64))
+        scope = f.get("scope")
+        for wrap in (lambda e: e, _memo):
+            lists = [(t, wrap(e)) for t, e in rows]
+            neg_rows = [("tn", wrap(e)) for e in f.get("neg", [])]
+            for prune in (True, False):
+                got = _shard_kernel_and(
+                    lists, idf, avgdl, 10, dead, prune=prune, scope=scope,
+                    neg_rows=neg_rows,
+                )
+                assert got == exp, (name, wrap, prune)
+                for (t, x), (_, e) in zip(lists, rows):
+                    single = _topk_single(
+                        x, idf[t], avgdl, 10, dead, scope, neg_rows, prune=prune
+                    )
+                    assert single == _brute_topk(
+                        [(t, e)], idf, avgdl, 10, "and", **f
+                    ), (name, t, wrap, prune)
 
 
 def test_and_pruning_sound_when_high_driver_docs_fail_conjunction():
@@ -325,13 +399,13 @@ def test_or_block_prune_exact_and_cheaper(monkeypatch):
     counts = {"blocks": 0}
     orig_blocks, orig_full = codec.decode_blocks, codec.decode_postings
 
-    def counting_blocks(enc, blocks, with_positions=False):
+    def counting_blocks(enc, blocks, **kw):
         counts["blocks"] += len(np.atleast_1d(blocks))
-        return orig_blocks(enc, blocks, with_positions)
+        return orig_blocks(enc, blocks, **kw)
 
-    def counting_full(enc, with_positions=False):
+    def counting_full(enc, **kw):
         counts["blocks"] += enc.bmax_docid.size
-        return orig_full(enc, with_positions)
+        return orig_full(enc, **kw)
 
     monkeypatch.setattr(
         "honeywell_search_engine_spark.query.wand.codec.decode_blocks", counting_blocks
@@ -347,6 +421,28 @@ def test_or_block_prune_exact_and_cheaper(monkeypatch):
     full_blocks = counts["blocks"]
     assert res_pruned == res_full
     assert pruned_blocks < full_blocks, (pruned_blocks, full_blocks)
+
+    # prune on and off, EncodedList and MemoList inputs: all equal the
+    # exhaustive reference under tombstone and scope filters (each of
+    # which changes the top-10)
+    filters = {
+        "none": {},
+        "dead": {"dead": np.sort(d0[:10:3].astype(np.int64))},
+        "scope": {"scope": docids[1::2].astype(np.int64)},
+    }
+    filters["all"] = {**filters["dead"], **filters["scope"]}
+    plain = _brute_topk(rows, idf, avgdl, 10, "or")
+    for name, f in filters.items():
+        exp = _brute_topk(rows, idf, avgdl, 10, "or", **f)
+        assert exp and (exp != plain) == (name != "none"), name
+        dead = f.get("dead", np.zeros(0, dtype=np.int64))
+        for wrap in (lambda e: e, _memo):
+            lists = [(t, wrap(e)) for t, e in rows]
+            for prune in (True, False):
+                got = _shard_kernel_or(
+                    lists, idf, avgdl, 10, dead, prune=prune, scope=f.get("scope")
+                )
+                assert got == exp, (name, wrap, prune)
 
 
 def test_cached_searcher(seg_index, oracle):
@@ -723,3 +819,88 @@ def test_bucket_checksums_pre_fmt_index(spark, seg_index, tmp_path):
     # index_report runs on the pre-fmt layout too (same column guard)
     rep = index_report(spark, old).collect()
     assert len(rep) > 0
+
+
+def test_spark_idf_bit_exact_at_log1p_ulp_pair(spark, tmp_path):
+    """Regression: the Spark kernels took idf from term_stats, computed by
+    the JVM's log1p, which is one ulp off Python's math.log1p (what the
+    oracle and the serving node use) for some (N, df) — the smallest is
+    N=30, df=4 (JVM 1.929909807708872, Python 1.9299098077088723). On a
+    30-doc index where one term has df 4 the Spark path, the serving node
+    and the oracle must agree bit for bit."""
+    import datetime
+
+    import pandas as pd
+
+    from honeywell_search_engine_spark.oracle import OracleIndex
+    from honeywell_search_engine_spark.query.local import ServingIndex
+    from honeywell_search_engine_spark.query.wand import bm25_topk_wand_batch
+    from honeywell_search_engine_spark.sources.pages import PAGES_SCHEMA
+
+    texts = [
+        f"page{i} shared " + "filler " * (i % 5) + ("ulpterm" if i < 4 else "")
+        for i in range(30)
+    ]
+    pdf = pd.DataFrame(
+        {
+            "url": [f"https://example.com/ulp/{i}" for i in range(30)],
+            "warc_ts": [datetime.datetime(2024, 1, 1)] * 30,
+            "html": [t.encode() for t in texts],
+            "text": texts,
+            "lang": ["en"] * 30,
+        }
+    )
+    pages_dir = str(tmp_path / "pages")
+    spark.createDataFrame(pdf, schema=PAGES_SCHEMA).coalesce(1).write.parquet(pages_dir)
+    idx = _build(
+        spark, pages_dir, str(tmp_path / "idx"),
+        n_buckets=4, n_shards=2, buckets_per_job=4,
+    )
+    oracle = OracleIndex.build([(docid_py(u), t) for u, t in zip(pdf.url, texts)])
+    assert idx.stats.n_docs == oracle.n_docs == 30
+    assert len(oracle.postings["ulpterm"]) == 4
+    sv = ServingIndex(idx.path)
+    for q in ("ulpterm", "ulpterm shared"):
+        for mode in ("and", "or"):
+            exp = (oracle.search if mode == "and" else oracle.search_or)(q, k=10)
+            got = [
+                (r["docid"], r["score"])
+                for r in bm25_topk_wand(idx, q, k=10, mode=mode).collect()
+            ]
+            assert got == exp, (q, mode)
+            assert sv.search(q, k=10, mode=mode) == exp, (q, mode)
+    batch = [
+        (r["docid"], r["score"])
+        for r in bm25_topk_wand_batch(idx, {"a": "ulpterm"}, k=10).collect()
+    ]
+    assert batch == oracle.search("ulpterm", k=10)
+    assert idx.idf_map(["ulpterm"]) == {"ulpterm": oracle.idf("ulpterm")}
+
+
+def test_segments_with_idf_empty_terms(seg_index):
+    """segments_with_idf([]) is an empty DataFrame with the usual schema
+    (it rendered `term IN ()`, a ParseException)."""
+    empty = seg_index.segments_with_idf([])
+    assert empty.columns == seg_index.segments_with_idf(["data"]).columns
+    assert empty.count() == 0
+
+
+def test_segments_with_idf_backslash_and_quote_terms(seg_index):
+    """A term ending in a backslash escaped the closing quote of its SQL
+    literal (ParseException); with quotes and backslashes escaped, such
+    terms match nothing and leave the other terms of the query intact —
+    also through the caller-supplied `pre_analyzed` surface."""
+    odd = ["abc\\", "o'neil", "a\\'b", 'x"y']
+    assert seg_index.segments_with_idf(odd).count() == 0
+    got = seg_index.segments_with_idf(["data"] + odd)
+    assert {r["term"] for r in got.select("term").collect()} == {"data"}
+
+    def rows(df):
+        return [(r["docid"], r["score"]) for r in df.collect()]
+
+    exp = rows(bm25_topk_wand(seg_index, "", k=10, mode="or", pre_analyzed=["data"]))
+    assert exp
+    assert rows(
+        bm25_topk_wand(seg_index, "", k=10, mode="or", pre_analyzed=["data"] + odd)
+    ) == exp
+    assert rows(bm25_topk_wand(seg_index, "", k=10, pre_analyzed=["abc\\"])) == []
